@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Per-layer report: where each workload's traced pass time goes.
 
-    python3 perfbench/report.py [--seed 1] [--seconds 14] [--workload NAME ...]
+    python3 perfbench/report.py [--seed 1] [--seconds N] [--workload NAME ...]
 
 Runs ``run.py --trace 1`` for each workload (all by default) and prints,
 per workload, the self time of every layer split into the part spent
@@ -77,7 +77,11 @@ def table(record: dict) -> str:
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=14)
+    ap.add_argument(
+        "--seconds",
+        type=float,
+        default=json.loads((HERE.parent / "BENCHMARK.json").read_text())["run_seconds"],
+    )
     ap.add_argument("--workload", action="append", choices=sorted(WORKLOADS))
     ap.add_argument("--from-results", action="store_true")
     args = ap.parse_args(argv)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Benchmark of the echem_dft_etl_spark engine: one workload per run.
 
-    python3 perfbench/run.py --workload etl_stream --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload etl_stream --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout. One run is one closed-loop batch
 client: it submits the workload's queries one after another on
@@ -10,16 +10,20 @@ persisted RDDs and caches between queries.
 
 A run starts fresh worker processes (``worker.py``), one after another:
 
-1. two set-up probes that only set the program up and exit;
+1. a set-up probe that only sets the program up and exits;
 2. the main worker, which sets up, runs one untimed pass that collects
-   every query and compares it with its DuckDB oracle, then measures
-   warm passes for ``--seconds``.
+   every query and compares it with its DuckDB oracle, two untimed
+   warm-up passes, then measures warm passes for ``--seconds``.
 
-``setup_s`` is the median set-up time of the three processes (process
+``setup_s`` is the median set-up time of the two processes (process
 start to inputs ready: JVM launch, ``session.get_session``, registry
-import and seeded input generation). With ``--trace 1`` no probes run;
+import and seeded input generation). With ``--trace 1`` no probe runs;
 the main worker alternates untraced and traced passes and the result
 holds the per-layer metrics instead (see ``layertrace.py``).
+
+``setup_s``, ``pass_s`` and ``query_geomean_s`` are scaled to a
+reference host speed measured between queries (``worker.host_speed``);
+the unscaled times are printed and kept in the record.
 
 The last line of standard output is one JSON object with the keys
 ``correct``, ``attempted``, ``failed`` and ``metrics``. The lines before
@@ -31,6 +35,7 @@ seed, input size, Spark version, loadavg). The full result is kept in
 from __future__ import annotations
 
 import argparse
+import fcntl
 import json
 import os
 import shutil
@@ -51,7 +56,7 @@ WORK_ROOT = ROOT / ".perfbench-work"
 CPUS = 4
 #: Driver heap for local[4] on a 15 GiB host (the session default is 24g).
 DRIVER_MEM = "2g"
-SETUP_PROBES = 2
+SETUP_PROBES = 1
 #: The main worker is ended this many seconds after the run started.
 RUN_LIMIT_S = 175.0
 
@@ -100,8 +105,6 @@ def run_worker(args, role: str, work: Path, out: Path, timeout: float) -> dict |
         "--work", str(work),
         "--out", str(out),
     ]
-    if args.queries:
-        cmd += ["--queries", args.queries]
     log = work / f"{out.stem}.log"
     started = time.monotonic()
     with open(log, "w") as fh:
@@ -137,7 +140,6 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--queries", default="", help=argparse.SUPPRESS)
     args = ap.parse_args(argv)
 
     # a terminated run still ends its workers (run_worker's finally)
@@ -148,20 +150,27 @@ def main(argv=None) -> int:
         return 2
 
     t0 = time.monotonic()
-    work = WORK_ROOT / f"{args.workload}-{args.seed}-{args.trace}-{os.getpid()}"
+    # one fixed work directory per workload (see worker.Run.setup); a
+    # second run of the workload in this checkout waits for the first
+    WORK_ROOT.mkdir(exist_ok=True)
+    lock = open(WORK_ROOT / f"{args.workload}.lock", "w")
+    fcntl.flock(lock, fcntl.LOCK_EX)
+    work = WORK_ROOT / args.workload
+    shutil.rmtree(work, ignore_errors=True)
     for sub in ("tmp", "local"):
         (work / sub).mkdir(parents=True, exist_ok=True)
     results = WORK_ROOT / "results"
     results.mkdir(parents=True, exist_ok=True)
     load_start = loadavg()
     try:
-        setups, walls = [], []
+        setups, raw_setups, walls = [], [], []
         if not args.trace:
             for i in range(SETUP_PROBES):
                 probe = run_worker(args, "probe", work, work / f"probe{i}.json", 60.0)
                 if probe is None:
                     return 1
                 setups.append(probe["setup_s"])
+                raw_setups.append(probe["raw.setup_s"])
                 walls.append(probe["wall_s"])
         main_res = run_worker(
             args, "main", work, work / "main.json", RUN_LIMIT_S - (time.monotonic() - t0)
@@ -172,6 +181,7 @@ def main(argv=None) -> int:
         shutil.rmtree(work, ignore_errors=True)
 
     setups.append(main_res["setup_s"])
+    raw_setups.append(main_res["raw.setup_s"])
     failures = main_res["failures"]
     record = {
         "workload": args.workload,
@@ -183,6 +193,7 @@ def main(argv=None) -> int:
         "loadavg_start": load_start,
         "loadavg_end": loadavg(),
         "setup_samples_s": setups,
+        "raw.setup_samples_s": raw_setups,
         "worker_walls_s": walls + [main_res["wall_s"]],
         **main_res,
     }
@@ -202,7 +213,13 @@ def main(argv=None) -> int:
             "peak_rss_mb": main_res["peak_rss_mb"],
         }
         metrics = {k: {"value": values[k], "unit": u} for k, u in metric_units("end_to_end").items()}
-        samples = f"{len(main_res['passes'])} timed passes, {len(setups)} set-ups"
+        samples = (
+            f"{len(main_res['passes'])} timed passes, {len(setups)} set-ups; "
+            f"unscaled: setup_s={statistics.median(raw_setups):.3f} "
+            f"pass_s={main_res['raw.pass_s']:.3f} "
+            f"query_geomean_s={main_res['raw.query_geomean_s']:.4f} "
+            f"at host speed {main_res['speed']:.2f}"
+        )
     size = main_res["input_size"]
     print(
         f"perfbench: workload={args.workload} seed={args.seed} cpus={CPUS} "

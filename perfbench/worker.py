@@ -5,10 +5,11 @@ JVM launch a user pays) and writes one JSON result file:
 
 - ``--role probe``: set up and stop; the result holds only ``setup_s``.
 - ``--role main``: set up, run one untimed pass that collects every
-  query and compares it with its DuckDB oracle, then run warm passes
-  until ``--seconds`` have been measured. With ``--trace 1`` one more
-  untimed pass runs, then the warm passes alternate untraced and traced,
-  so the result carries the per-layer split and the tracing overhead.
+  query and compares it with its DuckDB oracle, ``WARM_PASSES`` untimed
+  warm-up passes, then warm passes until ``--seconds`` have been
+  measured. With ``--trace 1`` the warm passes alternate untraced and
+  traced, so the result carries the per-layer split and the tracing
+  overhead.
 """
 
 from __future__ import annotations
@@ -23,6 +24,9 @@ import time
 import traceback
 from pathlib import Path
 
+import numpy as np
+
+from layertrace import REGISTRY_LAYER, ROOT_LAYER, Tracer
 from workloads import TABLES, WORKLOADS, make_inputs, pass_order
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -45,30 +49,6 @@ def vm_hwm_mb(pid: int | str) -> float:
     raise RuntimeError(f"no VmHWM for pid {pid}")
 
 
-def stage_streams_under(work: Path) -> None:
-    """Stage streaming source directories under ``work`` instead of /tmp.
-
-    ``streaming.windows._as_stream_dir`` links each table file into a
-    fixed /tmp directory; this replacement builds the same one-link
-    directory inside the benchmark's work area, so a run writes only
-    inside its checkout.
-    """
-    import hashlib
-
-    from echem_dft_etl_spark.streaming import windows
-
-    def as_stream_dir(sf_dir: str, table: str = "events") -> str:
-        key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        d = work / "stream_src" / key / table
-        d.mkdir(parents=True, exist_ok=True)
-        link = d / f"{table}.parquet"
-        if not link.exists():
-            link.symlink_to(Path(sf_dir, f"{table}.parquet").resolve())
-        return str(d)
-
-    windows._as_stream_dir = as_stream_dir
-
-
 def release_leftovers(spark) -> None:
     """Drop persisted RDDs and cached plans a query left behind (untimed)."""
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
@@ -79,37 +59,29 @@ def release_leftovers(spark) -> None:
 # ------------------------------------------------------------ output check
 
 
-def _normalize_cell(v):
-    import datetime as dt
-
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return None if math.isnan(v) else v
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat(sep=" ", timespec="microseconds")
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if hasattr(v, "item"):
-        return v.item()
-    return v
-
-
-def _normalize(cols, rows):
-    """Order-insensitive form: columns sorted by name, rows sorted."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_normalize_cell(r[i]) for i in order) for r in rows]
-    return sorted(cols), sorted(out, key=lambda t: tuple((x is None, str(x)) for x in t))
-
-
 def check_output(df, rows, oracle_sql: str, duck) -> str | None:
-    """Compare collected Spark rows with the DuckDB oracle; None if equal."""
+    """Compare collected Spark rows with the DuckDB oracle; None if equal.
+
+    The comparison of ``scripts/verify_local.py``: type families of the
+    columns (Spark schema against DuckDB's arrow schema), then column
+    names, row count and values, order-insensitively.
+    """
+    from tests.test_oracle_parity import _arrow_family, _normalize_rows, _spark_family
+
     cur = duck.sql(oracle_sql)
     d_cols = [c.lower() for c in cur.columns]
     d_rows = [tuple(r) for r in cur.fetchall()]
-    s_cols = [c.lower() for c in df.columns]
-    sc, sn = _normalize(s_cols, [tuple(r) for r in rows])
-    dc, dn = _normalize(d_cols, d_rows)
+    s_fams = {f.name.lower(): _spark_family(f.dataType) for f in df.schema.fields}
+    d_fams = {f.name.lower(): _arrow_family(f.type) for f in duck.sql(oracle_sql).arrow().schema}
+    fam_diffs = {
+        c: (s_fams.get(c), d_fams.get(c))
+        for c in set(s_fams) | set(d_fams)
+        if s_fams.get(c) != d_fams.get(c)
+    }
+    if fam_diffs:
+        return f"type-family mismatch (spark, oracle) {fam_diffs}"
+    sc, sn = _normalize_rows([c.lower() for c in df.columns], [tuple(r) for r in rows])
+    dc, dn = _normalize_rows(d_cols, d_rows)
     if sc != dc:
         return f"columns {sc} vs oracle {dc}"
     if len(sn) != len(dn):
@@ -122,6 +94,53 @@ def check_output(df, rows, oracle_sql: str, duck) -> str | None:
 
 # ------------------------------------------------------------------ runner
 
+#: Untimed passes between the checked pass and the timed ones: the JIT
+#: and Spark's code generation keep speeding the first passes up.
+WARM_PASSES = 2
+
+
+#: Host speed, in ``host_speed`` units (GB/s), that reported times are
+#: scaled to: a time measured while the host ran at ``speed`` is
+#: reported as ``time * speed / REF_SPEED``.
+REF_SPEED = 25.0
+
+
+def host_speed(seconds: float = 0.1) -> float:
+    """How fast the host runs right now: the GB/s that one forked process
+    per CPU reads together, each summing its own 64 MB array over and over.
+
+    A virtual machine on a host shared with other tenants can run
+    1.5-2x faster or slower for a minute at a time: its CPUs are taken
+    away (steal time) and the shared cache and memory are contended.
+    Wall-clock read rate over every CPU at once sees both, and the
+    queries slow down with it far more closely than with the CPU-time
+    rate of a pure loop, so times scaled by it compare across runs.
+    Taken between queries, while Spark is idle.
+    """
+    r, w = os.pipe()
+    pids = []
+    for _ in range(int(os.environ["SPARK_GRAFT_CPUS"])):
+        pid = os.fork()
+        if pid == 0:  # child: read, report, leave without any clean-up
+            os.close(r)
+            a = np.ones(8_000_000)
+            start, n = time.perf_counter(), 0
+            while time.perf_counter() - start < seconds:
+                a.sum()
+                n += 1
+            os.write(w, f"{n * a.nbytes / (time.perf_counter() - start)}\n".encode())
+            os._exit(0)
+        pids.append(pid)
+    os.close(w)
+    for pid in pids:
+        os.waitpid(pid, 0)
+    with os.fdopen(r) as fh:
+        return sum(float(x) for x in fh.read().split()) / 1e9
+
+
+def scaled(seconds: float, speed: float) -> float:
+    return seconds * speed / REF_SPEED
+
 
 class Run:
     """One worker's session, inputs, and the failures and attempts it counted."""
@@ -130,6 +149,7 @@ class Run:
         self.args = args
         self.failures: list[dict] = []
         self.attempted = 0
+        self.tracer = Tracer()  # records nothing until it is made active
 
     def fail(self, query: str, pass_no: int, reason: str) -> None:
         self.failures.append({"query": query, "pass": pass_no, "reason": reason[:500]})
@@ -164,23 +184,25 @@ class Run:
         registry_import_s = time.perf_counter() - t
 
         self.workload = WORKLOADS[self.args.workload]
-        self.queries = (
-            tuple(self.args.queries.split(",")) if self.args.queries else self.workload.queries
-        )
+        self.queries = self.workload.queries
         unchecked = [q for q in self.queries if specs[q].oracle is None]
         if unchecked:
             raise ValueError(f"queries without a DuckDB oracle cannot be checked: {unchecked}")
         t = time.perf_counter()
-        self.sf_dir = work / f"inputs-{os.getpid()}"
+        # one fixed path per workload: the program stages stream sources
+        # in a directory named after it, which later runs then reuse
+        self.sf_dir = work / "inputs"
         self.input_size = make_inputs(self.workload, self.args.seed, self.sf_dir)
         inputs_s = time.perf_counter() - t
         setup_s = time.perf_counter() - born
 
         self.spark = spark
         self.specs = specs
-        stage_streams_under(work)
+        speed = statistics.median(host_speed() for _ in range(3))
         return {
-            "setup_s": setup_s,
+            "setup_s": scaled(setup_s, speed),
+            "setup_speed": speed,
+            "raw.setup_s": setup_s,
             "session.start_s": session_start_s,
             "session.registry_import_s": registry_import_s,
             "session.inputs_s": inputs_s,
@@ -218,29 +240,45 @@ class Run:
         finally:
             duck.close()
 
-    def run_query(self, name: str, pass_no: int) -> float | None:
-        """Run one query to completion with the noop sink; seconds or None."""
+    def run_query(self, name: str, pass_no: int, traced: bool = False) -> float | None:
+        """Run one query to completion with the noop sink; seconds or None.
+
+        When ``traced``, the query and its ``QuerySpec.fn`` call are
+        recorded as spans, and so are the calls of the wrapped layers.
+        """
+        tracer = self.tracer
         self.attempted += 1
+        tracer.query, tracer.active = name, traced
         try:
             t = time.perf_counter()
-            df = self.specs[name].fn(self.spark, str(self.sf_dir))
-            df.write.format("noop").mode("overwrite").save()
+            with tracer.span(name, ROOT_LAYER):
+                with tracer.span(name, REGISTRY_LAYER):
+                    df = self.specs[name].fn(self.spark, str(self.sf_dir))
+                df.write.format("noop").mode("overwrite").save()
             return time.perf_counter() - t
         except Exception as exc:
             self.fail(name, pass_no, f"{type(exc).__name__}: {exc}")
             return None
         finally:
+            tracer.active = False
             release_leftovers(self.spark)
+
+    def warm_up(self) -> None:
+        for pass_no in range(1, WARM_PASSES + 1):
+            for name in self.order(pass_no):
+                self.run_query(name, pass_no)
 
     def timed_passes(self) -> dict:
         deadline = time.perf_counter() + self.args.seconds
         passes: list[float] = []
         per_query: dict[str, list[float]] = {n: [] for n in self.queries}
-        pass_no = 1
+        speeds: list[float] = []
+        pass_no = WARM_PASSES + 1
         while True:
             total = 0.0
             for name in self.order(pass_no):
                 dt = self.run_query(name, pass_no)
+                speeds.append(host_speed())
                 if dt is not None:
                     per_query[name].append(dt)
                     total += dt
@@ -249,42 +287,44 @@ class Run:
             if time.perf_counter() >= deadline:
                 break
         medians = [statistics.median(v) for v in per_query.values() if v]
+        pass_s = statistics.median(passes)
+        geomean = math.exp(sum(math.log(m) for m in medians) / len(medians))
+        speed = statistics.median(speeds)
         return {
-            "pass_s": statistics.median(passes),
+            "pass_s": scaled(pass_s, speed),
+            "query_geomean_s": scaled(geomean, speed),
+            "speed": speed,
+            "raw.pass_s": pass_s,
+            "raw.query_geomean_s": geomean,
             "passes": passes,
-            "query_geomean_s": math.exp(sum(math.log(m) for m in medians) / len(medians)),
+            "speeds": speeds,
             "query_median_s": {n: statistics.median(v) for n, v in per_query.items() if v},
         }
 
     def traced_passes(self, result_rows: dict[str, int]) -> dict:
-        from layertrace import SparkCounters, StreamProgress, Tracer, pass_metrics
+        from layertrace import SparkCounters, StreamProgress, pass_metrics
 
-        tracer = Tracer()
-        replaced = tracer.install()
+        replaced = self.tracer.install()
         counters = SparkCounters(self.spark)
         listener = StreamProgress()
         self.spark.streams.addListener(listener)
 
-        # one more untimed pass first: the second pass is still much
-        # slower than the later ones and would land on one side only
-        for name in self.order(1):
-            self.run_query(name, 1)
         deadline = time.perf_counter() + self.args.seconds
         untraced: list[float] = []
         traced: list[dict] = []
-        pass_no = 1
+        pass_no = WARM_PASSES + 1
         while True:
             # untraced/traced in ABBA order, so the rest of the warm-up
             # trend does not fall on one side only
-            if pass_no % 4 in (0, 1):
+            if (pass_no - WARM_PASSES) % 4 in (0, 1):
                 untraced.append(
                     sum(self.run_query(name, pass_no) or 0.0 for name in self.order(pass_no))
                 )
             else:
-                traced.append(self._traced_pass(pass_no, tracer, counters, listener))
+                traced.append(self._traced_pass(pass_no, counters, listener))
             pass_no += 1
             # stop only after a whole ABBA block, so both sides are balanced
-            if time.perf_counter() >= deadline and pass_no % 4 == 1:
+            if time.perf_counter() >= deadline and (pass_no - WARM_PASSES) % 4 == 1:
                 break
         self.spark.streams.removeListener(listener)
 
@@ -303,9 +343,8 @@ class Run:
             "spans": [[s.name, s.layer, s.start, s.end, s.parent, s.query] for s in last["spans"]],
         }
 
-    def _traced_pass(self, pass_no, tracer, counters, listener) -> dict:
-        from layertrace import REGISTRY_LAYER, ROOT_LAYER
-
+    def _traced_pass(self, pass_no, counters, listener) -> dict:
+        """One traced pass: spans, plus Spark counters and stream progress per query."""
         spark_tot: dict[str, float] = {}
         stream_tot: dict[str, float] = {}
         stage_spans: list = []
@@ -313,23 +352,11 @@ class Run:
         per_query: dict[str, dict] = {}
         counters.collect()
         listener.take()
-        tracer.take()
+        self.tracer.take()
         for name in self.order(pass_no):
-            self.attempted += 1
-            tracer.query = name
-            tracer.active = True
-            try:
-                with tracer.span(name, ROOT_LAYER):
-                    with tracer.span(name, REGISTRY_LAYER):
-                        df = self.specs[name].fn(self.spark, str(self.sf_dir))
-                    df.write.format("noop").mode("overwrite").save()
-            except Exception as exc:
-                self.fail(name, pass_no, f"{type(exc).__name__}: {exc}")
-            finally:
-                tracer.active = False
+            self.run_query(name, pass_no, traced=True)
             c = counters.collect()
             s = listener.take()
-            release_leftovers(self.spark)
             stage_spans.extend(c.pop("stage_spans"))
             max_join_rows[name] = c.pop("max_join_rows")
             per_query[name] = {**c, **{f"streaming.{k}": v for k, v in s.items()}}
@@ -338,7 +365,7 @@ class Run:
             for k, v in s.items():
                 stream_tot[k] = stream_tot.get(k, 0) + v
         return {
-            "spans": tracer.take(),
+            "spans": self.tracer.take(),
             "spark": spark_tot,
             "stream": stream_tot,
             "stage_spans": stage_spans,
@@ -360,7 +387,6 @@ def main(argv=None) -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--work", required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--queries", default="", help="comma-separated override of the query list")
     args = ap.parse_args(argv)
 
     run = Run(args)
@@ -376,6 +402,7 @@ def main(argv=None) -> int:
         result["warmup.first_pass_s"] = first_s
         result["first_pass_query_s"] = first
         result["result_rows"] = result_rows
+        run.warm_up()
         if args.trace:
             result["trace"] = run.traced_passes(result_rows)
             result["trace"]["metrics"]["warmup.first_pass_s"] = first_s
