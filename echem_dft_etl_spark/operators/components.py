@@ -32,6 +32,15 @@ Scale notes (100 TB):
 - The label invariant (labels only ever DECREASE, toward the component
   min) makes the convergence test exact: a round that changes nothing
   proves the fixpoint.
+
+Storage discipline: ``localCheckpoint`` pins its blocks for the session
+lifetime (``operators/storage.py``), so the round loops here —
+connected components, forest flattening, PageRank and k-core peeling —
+all run through ONE loop helper, :func:`_iterate`, the single owner of
+the per-round policy: checkpoint on a cadence, test convergence while both
+the previous and the new round are pinned, release the superseded
+round, release everything it owns on any raise. Only the final round's
+blocks, which back the returned frame, outlive the call.
 """
 
 from __future__ import annotations
@@ -41,13 +50,44 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .storage import release_rdds, scoped_shuffle_width, tracked_checkpoint
 
-# Storage lifecycle lives in operators/storage.py (public API); the
-# underscore aliases remain for this module's historical call sites.
-from .storage import persistent_rdd_ids as _persistent_rdd_ids  # noqa: F401
-from .storage import release_rdds as _release_rdds
-from .storage import scoped_shuffle_width
-from .storage import tracked_checkpoint as _tracked_checkpoint
+
+def _iterate(state, ids, step, rounds, every=1, converged=None):
+    """Run ``state = step(i, state)`` for ``i`` in ``range(rounds)``.
+
+    ``ids`` are the storage ids pinning the entry ``state``; the loop
+    owns them from here on. After every ``every``-th round and the
+    last, the state is checkpointed and ``converged(prev, cur)`` (if
+    given) is asked while both checkpoints are pinned — so it may join
+    the two rounds — then the superseded round is released; a true
+    answer stops the loop. Every checkpoint is eager, so releasing a
+    predecessor never recomputes lineage. On any raise, every id the
+    loop owns is released.
+
+    Returns ``(state, ids, done)``: the final state, the ids backing
+    it, and whether ``converged`` stopped the loop.
+    """
+    spark = state.sparkSession
+    ids = list(ids)
+    prev = state
+    try:
+        for i in range(rounds):
+            state = step(i, state)
+            if (i + 1) % every and i < rounds - 1:
+                continue
+            n_prev = len(ids)
+            state = tracked_checkpoint(state, ids)
+            done = converged is not None and converged(prev, state)
+            release_rdds(spark, ids[:n_prev])
+            del ids[:n_prev]
+            if done:
+                return state, ids, True
+            prev = state
+    except BaseException:
+        release_rdds(spark, ids)
+        raise
+    return state, ids, False
 
 
 def connected_components(
@@ -96,29 +136,24 @@ def connected_components(
     # MinHash pipeline per iteration (measured: ~2s of the per-round
     # cost at sf0.1; at 100 TB it would dominate everything).
     spark = vertices.sparkSession
-    # Storage discipline: every checkpoint's pinned blocks are released
-    # as soon as they are superseded (previous round) or on exit (edge
-    # set); only the FINAL labels checkpoint — which the returned frame
-    # reads — stays pinned. All checkpoints here are materialized
-    # eagerly, so releasing predecessors never recomputes lineage.
-    sym_ids: list = []
     # The union's arms would otherwise each recompute the caller's
     # edge lineage (for duplicate_clusters that is the whole MinHash
     # pipeline — twice, inside one materialization job): pin the edge
     # projection first, symmetrize FROM the pin, release the pin once
-    # sym is materialized.
+    # sym is materialized. Both pins are released on exit; the label
+    # rounds' blocks belong to _iterate.
     base_ids: list = []
-    base = _tracked_checkpoint(
+    sym_ids: list = []
+    base = tracked_checkpoint(
         edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ),
         base_ids,
     )
-
-    prev_ids: list = []
-    labels = _tracked_checkpoint(
+    ids: list = []
+    labels = tracked_checkpoint(
         vertices.select(F.col(id_col).alias("v"), F.col(id_col).alias("lbl")),
-        prev_ids,
+        ids,
     )
     # Size the LOOP's exchanges to the graph, not the session default
     # (storage.scoped_shuffle_width; measured 14.8 s → 8.9 s for an
@@ -126,12 +161,7 @@ def connected_components(
     # vs 9 s at width 8 vs width 1 on the same graph). The count is
     # one cheap job over the already-materialized checkpoint (the same
     # authoring-time-probe class as grouped_percentiles_with_guard).
-    # try/finally: failures (no-fixpoint, a mid-round task error) must
-    # not leak the edge set or the in-flight round's blocks — leaking
-    # on the error path would reintroduce the exact session-lifetime
-    # storage growth this bookkeeping exists to prevent; the width
-    # restore rides the scoped_shuffle_width context manager.
-    converged = False
+    done = False
     try:
         with scoped_shuffle_width(spark, 2 * base.count()) as loop_width:
             # Symmetrized edges PLUS one self-loop per vertex: the
@@ -142,7 +172,7 @@ def connected_components(
             # PRESERVES that partitioning, so every round's edge side
             # joins exchange-free; only the (much smaller after
             # contraction) label side shuffles.
-            sym = _tracked_checkpoint(
+            sym = tracked_checkpoint(
                 base.union(
                     base.select(
                         F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -154,7 +184,7 @@ def connected_components(
                 )),
                 sym_ids,
             )
-            _release_rdds(spark, base_ids)
+            release_rdds(spark, base_ids)
 
             # Labels are per-vertex MONOTONE non-increasing (relax takes a
             # min that includes self; jump follows pointers downward), so
@@ -163,16 +193,15 @@ def connected_components(
             # carrying an old_lbl column through every hop. decimal(38,0)
             # keeps the sum exact at any vertex-id scale.
             lbl_sum = F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-            prev_sum = labels.agg(lbl_sum).collect()[0][0]
+            sums = [labels.agg(lbl_sum).collect()[0][0]]
             schedule = (
                 (relax_per_round,)
                 if isinstance(relax_per_round, int)
                 else tuple(relax_per_round)
             )
-            for round_no in range(max_rounds):
-                cur = labels
-                n_hops = schedule[min(round_no, len(schedule) - 1)]
-                for _hop in range(n_hops):
+
+            def step(round_no, cur):
+                for _hop in range(schedule[min(round_no, len(schedule) - 1)]):
                     # 1-hop: min over {self} ∪ neighbors, keyed on dst.
                     cur = (
                         sym.join(cur, sym["src"] == cur["v"])
@@ -183,53 +212,38 @@ def connected_components(
                 # Pointer jump: label(v) <- label(label(v)). Labels are
                 # always live vertex ids, so the self-join total-resolves.
                 m = cur.select(F.col("v").alias("mv"), F.col("lbl").alias("mlbl"))
-                round_ids: list = []
-                jumped = _tracked_checkpoint(
-                    cur.join(m, cur["lbl"] == m["mv"]).select(
-                        "v", F.col("mlbl").alias("lbl")
-                    ),
-                    round_ids,
+                return cur.join(m, cur["lbl"] == m["mv"]).select(
+                    "v", F.col("mlbl").alias("lbl")
                 )
-                # From here until the promote below, BOTH rounds' ids are
-                # in prev_ids, so a throwing action (the stats join needs
-                # the previous round's blocks alive) cannot leak either.
-                prev_ids.extend(round_ids)
-                if round_stats is not None:
-                    changed = (
-                        jumped.join(
-                            labels.select("v", F.col("lbl").alias("prev_lbl")),
-                            "v",
-                        )
-                        .filter(F.col("lbl") != F.col("prev_lbl"))
-                        .count()
-                    )
-                _release_rdds(
-                    spark, [i for i in prev_ids if i not in round_ids]
-                )
-                prev_ids = round_ids
-                labels = jumped
-                s = jumped.agg(lbl_sum).collect()[0][0]
+
+            def converged(prev, cur):
+                sums.append(cur.agg(lbl_sum).collect()[0][0])
                 if round_stats is not None:
                     round_stats.append(
                         {
-                            "round": round_no,
-                            "changed": changed,
-                            "n_labels": labels.select("lbl").distinct().count(),
+                            "round": len(sums) - 2,
+                            "changed": cur.join(
+                                prev.select("v", F.col("lbl").alias("prev_lbl")),
+                                "v",
+                            )
+                            .filter(F.col("lbl") != F.col("prev_lbl"))
+                            .count(),
+                            "n_labels": cur.select("lbl").distinct().count(),
                         }
                     )
-                if s == prev_sum:
-                    converged = True
-                    break
-                prev_sum = s
-            if not converged:
-                raise RuntimeError(
-                    f"connected_components: no fixpoint in {max_rounds} rounds"
-                )
+                return sums[-1] == sums[-2]
+
+            labels, ids, done = _iterate(
+                labels, ids, step, max_rounds, converged=converged
+            )
+        if not done:
+            raise RuntimeError(
+                f"connected_components: no fixpoint in {max_rounds} rounds"
+            )
     finally:
-        _release_rdds(spark, sym_ids)
-        _release_rdds(spark, base_ids)  # no-op unless sym build failed
-        if not converged:  # error path: the last round's blocks are dead too
-            _release_rdds(spark, prev_ids)
+        release_rdds(spark, base_ids + sym_ids)
+        if not done:  # error path: the last round's blocks are dead too
+            release_rdds(spark, ids)
     return labels.select(F.col("v").alias(id_col), F.col("lbl").alias("cluster_id"))
 
 
@@ -277,16 +291,16 @@ def forest_root_depth(
     whose ancestor is already a root are fixed points; the loop stops
     on an exact zero-changes count.
 
-    Same storage discipline as :func:`connected_components`: per-round
-    eager localCheckpoint (else round k's plan contains 2^k state
-    scans), previous round's blocks released immediately, error paths
-    release the in-flight round. Every round is a hash equi-join on
-    node ids — no broadcast of data-sized frames; skewed fan-in (a hub
-    parent) is ordinary join skew, absorbed by AQE.
+    Storage runs through :func:`_iterate`: per-round eager
+    localCheckpoint (else round k's plan contains 2^k state scans),
+    previous round's blocks released immediately, error paths release
+    the in-flight round. Every round is a hash equi-join on node ids —
+    no broadcast of data-sized frames; skewed fan-in (a hub parent) is
+    ordinary join skew, absorbed by AQE.
     """
     spark = nodes.sparkSession
-    prev_ids: list = []
-    state = _tracked_checkpoint(
+    ids: list = []
+    state = tracked_checkpoint(
         nodes.select(
             F.col(id_col).alias("v"),
             F.coalesce(F.col(parent_col), F.col(id_col)).alias("anc"),
@@ -295,40 +309,34 @@ def forest_root_depth(
             .cast("bigint")
             .alias("d"),
         ),
-        prev_ids,
+        ids,
     )
-    converged = False
-    try:
-        for _round in range(max_rounds):
-            m = state.select(
-                F.col("v").alias("mv"),
-                F.col("anc").alias("manc"),
-                F.col("d").alias("md"),
-            )
-            round_ids: list = []
-            nxt = _tracked_checkpoint(
-                state.join(m, state["anc"] == m["mv"]).select(
-                    "v",
-                    F.col("manc").alias("anc"),
-                    (F.col("d") + F.col("md")).alias("d"),
-                    (F.col("md") > 0).alias("_moved"),
-                ),
-                round_ids,
-            )
-            _release_rdds(spark, prev_ids)
-            prev_ids = round_ids
-            changed = nxt.filter(F.col("_moved")).count()
-            state = nxt.drop("_moved")
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"forest_root_depth: no fixpoint in {max_rounds} rounds"
-            )
-    finally:
-        if not converged:
-            _release_rdds(spark, prev_ids)
+
+    def step(_round, state):
+        m = state.select(
+            F.col("v").alias("mv"),
+            F.col("anc").alias("manc"),
+            F.col("d").alias("md"),
+        )
+        return state.join(m, state["anc"] == m["mv"]).select(
+            "v",
+            F.col("manc").alias("anc"),
+            (F.col("d") + F.col("md")).alias("d"),
+            (F.col("md") > 0).alias("_moved"),
+        )
+
+    state, ids, done = _iterate(
+        state,
+        ids,
+        step,
+        max_rounds,
+        converged=lambda _prev, cur: cur.filter(F.col("_moved")).count() == 0,
+    )
+    if not done:
+        release_rdds(spark, ids)
+        raise RuntimeError(
+            f"forest_root_depth: no fixpoint in {max_rounds} rounds"
+        )
     return state.select(
         F.col("v").alias(id_col),
         F.col("anc").alias("root"),
@@ -378,8 +386,8 @@ def integer_pagerank(
     the final round) truncates lineage while paying a third of the
     materialization round-trips — three rounds of join+agg lineage is
     well inside planner comfort, and the blocks of the superseded
-    checkpoint are released as soon as the next materializes (the
-    same storage discipline as :func:`connected_components`). Overflow bound: the binding
+    checkpoint are released as soon as the next materializes
+    (:func:`_iterate`, every=3). Overflow bound: the binding
     constraint is the per-share multiply ``mass * damp_num`` — in the
     worst case (a sink-like hub) one node can accumulate nearly ALL
     circulating mass ``N * node_mass``, so bigint safety requires
@@ -410,30 +418,25 @@ def integer_pagerank(
     # joined back onto the edge list (the r10 annotate-the-edges
     # layout paid a second edge-scale checkpoint for it, +2 s setup
     # at sf0.1).
-    ed = _tracked_checkpoint(edges, owned)
-    n_edge_rows = ed.count()
-    prev_ids: list = []
-    ok = False
+    ed = tracked_checkpoint(edges, owned)
     try:
         # Same loop-width discipline as connected_components: size the
         # per-round exchanges to the edge frame, restored on exit
         # (serial-planning assumption documented in
-        # storage.scoped_shuffle_width). The count above is one cheap
-        # job over the already-pinned blocks.
-        with scoped_shuffle_width(spark, n_edge_rows):
+        # storage.scoped_shuffle_width). The count is one cheap job
+        # over the already-pinned blocks.
+        with scoped_shuffle_width(spark, ed.count()):
             # node set AND out-degree in one pass over the pinned
             # blocks, built at loop width so the per-round left join
             # stays narrow
-            nodes = _tracked_checkpoint(
+            nodes = tracked_checkpoint(
                 ed.groupBy(F.col("src").alias("v")).agg(
                     F.count(F.lit(1)).alias("outdeg")
                 ),
                 owned,
             )
-            mass = nodes.select(
-                "v", F.lit(node_mass).cast("bigint").alias("mass"), "outdeg"
-            )
-            for i in range(iterations):
+
+            def step(_i, mass):
                 shares = ed.join(
                     mass, ed["src"] == mass["v"]
                 ).select(
@@ -449,35 +452,35 @@ def integer_pagerank(
                 incoming = shares.groupBy("v").agg(
                     F.sum("share").alias("inc")
                 )
-                mass = nodes.join(incoming, "v", "left").select(
+                return nodes.join(incoming, "v", "left").select(
                     "v",
                     (
                         F.lit(base) + F.coalesce(F.col("inc"), F.lit(0))
                     ).cast("bigint").alias("mass"),
                     "outdeg",
                 )
-                # checkpoint every third round + the final round:
-                # localCheckpoint is EAGER, so the blocks of the
-                # superseded checkpoint are dead as soon as this
-                # returns
-                if i % 3 == 2 or i == iterations - 1:
-                    round_ids: list = []
-                    mass = _tracked_checkpoint(mass, round_ids)
-                    _release_rdds(spark, prev_ids)
-                    prev_ids = round_ids
-        ok = True
-        # outdeg was loop plumbing, never part of the contract
+
+            # checkpoint every third round + the final round: three
+            # rounds of join+agg lineage is well inside planner comfort
+            mass, _ids, _ = _iterate(
+                nodes.select(
+                    "v", F.lit(node_mass).cast("bigint").alias("mass"), "outdeg"
+                ),
+                [],
+                step,
+                iterations,
+                every=3,
+            )
+        # outdeg was loop plumbing, never part of the contract; the
+        # FINAL round's blocks back the returned frame and stay
         return mass.select("v", "mass")
     finally:
         # statics (edge list, node/outdeg set) are never part of the
-        # returned frame — always released; the FINAL round's blocks
-        # back the returned frame and stay, except on failure
-        _release_rdds(spark, owned)
-        if not ok:
-            _release_rdds(spark, prev_ids)
+        # returned frame — always released
+        release_rdds(spark, owned)
 
 
-def triangle_counts(pairs: DataFrame, checkpoint: bool = True) -> DataFrame:
+def triangle_counts(pairs: DataFrame) -> DataFrame:
     """Per-node exact triangle participation counts.
 
     ``pairs`` is an UNDIRECTED edge list in canonical form (a < b,
@@ -504,33 +507,26 @@ def triangle_counts(pairs: DataFrame, checkpoint: bool = True) -> DataFrame:
     hash-partitioned equi-join / aggregate — no windows, no broadcast
     of anything graph-sized (adjacency stays sharded by node).
 
-    ``checkpoint`` (default on) materializes the multiply-consumed
-    frames once — and r10 halved the round-trips (the pagerank
-    treatment, VERDICT r9 item 3): ``pairs`` (feeds the degree count
-    and the orientation join; the checkpoint also amortizes the
-    caller's construction cost, e.g. a self-join+distinct) and ``adj``
-    (the ONE frame the closure needs). ``oriented`` is no longer
-    checkpointed — it has exactly one consumer now, because the edge
-    probe is re-derived from ``adj`` itself: exploding the adjacency
-    array yields the oriented edges WITH the u-side neighbor list
-    already attached, so the closure needs a single equi-join (attach
-    ``N+(v)``) instead of two. ``pairs`` drops out of the result
-    lineage once ``adj`` is built, so its blocks are RELEASED before
-    returning — the pinned storage backing the returned frame is
-    ``adj`` alone (|V| rows of O(sqrt(m)) arrays ≈ |E| ids). Pass
-    ``checkpoint=False`` to keep the fully-lazy lineage.
+    Storage: the multiply-consumed frames are materialized once —
+    ``pairs`` (feeds the degree count and the orientation join; the
+    checkpoint also amortizes the caller's construction cost, e.g. a
+    self-join+distinct) and ``adj`` (the ONE frame the closure needs).
+    ``oriented`` is not checkpointed — it has exactly one consumer,
+    because the edge probe is re-derived from ``adj`` itself: exploding
+    the adjacency array yields the oriented edges WITH the u-side
+    neighbor list already attached, so the closure needs a single
+    equi-join (attach ``N+(v)``) instead of two. There is no round
+    loop, so nothing here goes through :func:`_iterate` (the owner of
+    the round loops' storage discipline); the same rule holds by hand:
+    ``pairs`` drops out of the result lineage once ``adj`` is built,
+    so its blocks are RELEASED before returning — the pinned storage
+    backing the returned frame is ``adj`` alone (|V| rows of
+    O(sqrt(m)) arrays ≈ |E| ids).
     """
     spark = pairs.sparkSession
     pair_ids: list = []
-    result_ids: list = []  # adj: backs the returned frame
-    ok = False
-    n_pair_rows = 0
     try:
-        if checkpoint:
-            pairs = _tracked_checkpoint(pairs, pair_ids)
-            # one cheap job over the pinned blocks; sizes the
-            # adjacency-build narrowing below
-            n_pair_rows = pairs.count()
+        pairs = tracked_checkpoint(pairs, pair_ids)
         # symmetric degree via one exploded scan (not a 2-arm union)
         deg = (
             pairs.select(F.explode(F.array("a", "b")).alias("v"))
@@ -549,76 +545,71 @@ def triangle_counts(pairs: DataFrame, checkpoint: bool = True) -> DataFrame:
             F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         )
 
-        adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
-        closure_width = None
-        if checkpoint:
-            # Width discipline (storage.scoped_shuffle_width): the
-            # adjacency build — the ONE eager job here: degree +
-            # orient + collect_list over the edge list — pays ~6
-            # shuffle stages whose scheduling cost is proportional to
-            # width even when partitions are tiny (measured 4.0 s →
-            # 3.1 s at sf0.1's 1.2M edges from 32 → 8 idle-stage
-            # narrowing; a 100 TB edge list keeps full width). Only
-            # this materialization is wrapped: the returned closure
-            # plan executes later, at the caller's session width.
-            with scoped_shuffle_width(spark, n_pair_rows) as closure_width:
-                adj = _tracked_checkpoint(adj, result_ids)
-
-        # Edge probe derived FROM adj: (u, N+(u), v) per oriented edge —
-        # the u-side adjacency rides along map-side, so the closure is
-        # ONE shuffle join (attach N+(v)) instead of two. The join
-        # ships |E| rows carrying an O(sqrt(m)) array + |V| adjacency
-        # rows — strictly less wire than the two-join form's
-        # |E| + 2|V| array transfers.
-        e = adj.select(
-            F.col("src").alias("u"),
-            F.col("nbrs").alias("nu"),
-            F.explode("nbrs").alias("v"),
-        )
-        av = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nv"))
-        if closure_width is not None:
-            # Pin the closure join's width into the PLAN: the returned
-            # frame executes after this function exits (and after the
-            # scoped conf is restored), so session-conf narrowing
-            # cannot reach it — instead both join inputs are
-            # explicitly hash-partitioned on the probe key at the same
-            # graph-sized width, EnsureRequirements adds no further
-            # exchange, and the closure's one wide shuffle runs at the
-            # width the edge list justifies instead of the session
-            # default (r11: 6.56 → 5.82 s min same-session A/B at
-            # sf0.1 — the idle-stage story again). The corner count's
-            # own exchange stays at session width deliberately: its
-            # map-side partial combine shrinks the stream to |V| rows
-            # per partition first. At 100 TB the computed width equals
-            # the session width, so the pin is a no-op there.
-            e = e.repartition(closure_width, "v")
-            av = av.repartition(closure_width, "v")
-        tri_base = (
-            e.join(av, "v")
-            .select("u", "v", F.array_intersect("nu", "nv").alias("apexes"))
-            .filter(F.size("apexes") > 0)
-        )
-        # Corner counts via the flat triple explode: an algebraic
-        # (node, weight)-struct spelling emits ~40% fewer rows but
-        # builds a struct per element in an interpreted transform —
-        # A/B-measured SLOWER (5.0 vs 4.65 s min at sf0.1), and the
-        # two-branch union spelling re-executes the closure join.
-        # Flat bigint rows through a map-side-combined count win.
-        corners = tri_base.select(
-            F.explode("apexes").alias("w"), "u", "v"
-        ).select(F.explode(F.array("u", "v", "w")).alias("v"))
-        ok = True
-        return corners.groupBy("v").agg(
-            F.count("*").cast("bigint").alias("n_triangles")
-        )
+        # Width discipline (storage.scoped_shuffle_width): the
+        # adjacency build — the ONE eager job here: degree + orient +
+        # collect_list over the edge list — pays ~6 shuffle stages
+        # whose scheduling cost is proportional to width even when
+        # partitions are tiny (measured 4.0 s → 3.1 s at sf0.1's 1.2M
+        # edges from 32 → 8 idle-stage narrowing; a 100 TB edge list
+        # keeps full width), sized by one cheap count over the pinned
+        # pairs. Only this materialization is wrapped: the returned
+        # closure plan executes later, at the caller's session width.
+        # adj's blocks back the returned frame, so they stay pinned.
+        with scoped_shuffle_width(spark, pairs.count()) as closure_width:
+            adj = oriented.groupBy("src").agg(
+                F.collect_list("dst").alias("nbrs")
+            ).localCheckpoint()
     finally:
         # pairs is no longer in the returned frame's lineage (adj is
-        # the checkpoint root) — always release it; on failure also
-        # release the frames that would have backed the returned
-        # frame, or they leak for the session lifetime.
-        _release_rdds(spark, pair_ids)
-        if not ok:
-            _release_rdds(spark, result_ids)
+        # the checkpoint root) — always release it
+        release_rdds(spark, pair_ids)
+
+    # Edge probe derived FROM adj: (u, N+(u), v) per oriented edge —
+    # the u-side adjacency rides along map-side, so the closure is
+    # ONE shuffle join (attach N+(v)) instead of two. The join
+    # ships |E| rows carrying an O(sqrt(m)) array + |V| adjacency
+    # rows — strictly less wire than the two-join form's
+    # |E| + 2|V| array transfers.
+    e = adj.select(
+        F.col("src").alias("u"),
+        F.col("nbrs").alias("nu"),
+        F.explode("nbrs").alias("v"),
+    )
+    av = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nv"))
+    if closure_width is not None:
+        # Pin the closure join's width into the PLAN: the returned
+        # frame executes after this function exits (and after the
+        # scoped conf is restored), so session-conf narrowing
+        # cannot reach it — instead both join inputs are
+        # explicitly hash-partitioned on the probe key at the same
+        # graph-sized width, EnsureRequirements adds no further
+        # exchange, and the closure's one wide shuffle runs at the
+        # width the edge list justifies instead of the session
+        # default (r11: 6.56 → 5.82 s min same-session A/B at
+        # sf0.1 — the idle-stage story again). The corner count's
+        # own exchange stays at session width deliberately: its
+        # map-side partial combine shrinks the stream to |V| rows
+        # per partition first. At 100 TB the computed width equals
+        # the session width, so the pin is a no-op there.
+        e = e.repartition(closure_width, "v")
+        av = av.repartition(closure_width, "v")
+    tri_base = (
+        e.join(av, "v")
+        .select("u", "v", F.array_intersect("nu", "nv").alias("apexes"))
+        .filter(F.size("apexes") > 0)
+    )
+    # Corner counts via the flat triple explode: an algebraic
+    # (node, weight)-struct spelling emits ~40% fewer rows but
+    # builds a struct per element in an interpreted transform —
+    # A/B-measured SLOWER (5.0 vs 4.65 s min at sf0.1), and the
+    # two-branch union spelling re-executes the closure join.
+    # Flat bigint rows through a map-side-combined count win.
+    corners = tri_base.select(
+        F.explode("apexes").alias("w"), "u", "v"
+    ).select(F.explode(F.array("u", "v", "w")).alias("v"))
+    return corners.groupBy("v").agg(
+        F.count("*").cast("bigint").alias("n_triangles")
+    )
 
 
 def bfs_distances(
@@ -677,14 +668,14 @@ def bfs_distances(
     layer_ids: list = []
     ok = False
     try:
-        sym = _tracked_checkpoint(sym, statics)
+        sym = tracked_checkpoint(sym, statics)
         n_sym_rows = sym.count()
         # Width discipline (storage.scoped_shuffle_width): the eager
         # work is the per-round frontier-expansion checkpoints inside
         # this block; the returned union-of-layers plan executes
         # later, at the caller's session width, reading pinned blocks.
         with scoped_shuffle_width(spark, n_sym_rows):
-            frontier = _tracked_checkpoint(
+            frontier = tracked_checkpoint(
                 seeds.select(
                     F.col(seeds.columns[0]).cast("bigint").alias("v"),
                     F.lit(0).cast("bigint").alias("hops"),
@@ -695,27 +686,23 @@ def bfs_distances(
             layers = [frontier]
             visited = frontier.select("v")
             for i in range(1, max_hops + 1):
-                round_ids: list = []
-                nxt = _tracked_checkpoint(
+                n_pinned = len(layer_ids)
+                nxt = tracked_checkpoint(
                     frontier.select("v")
                     .join(sym, F.col("v") == F.col("src"))
                     .select(F.col("dst").alias("v"))
                     .distinct()
                     .join(visited, "v", "left_anti")
                     .select("v", F.lit(i).cast("bigint").alias("hops")),
-                    round_ids,
+                    layer_ids,
                 )
-                try:
-                    n_new = nxt.count()  # eager + convergence probe in one
-                except Exception:
-                    _release_rdds(spark, round_ids)
-                    raise
+                n_new = nxt.count()  # eager + convergence probe in one
                 if round_stats is not None:
                     round_stats.append({"round": i, "frontier": n_new})
                 if n_new == 0:
-                    _release_rdds(spark, round_ids)
+                    # the empty layer backs nothing: release it now
+                    release_rdds(spark, layer_ids[n_pinned:])
                     break
-                layer_ids.extend(round_ids)
                 layers.append(nxt)
                 visited = visited.unionAll(nxt.select("v"))
                 frontier = nxt
@@ -725,9 +712,55 @@ def bfs_distances(
         ok = True
         return out
     finally:
-        _release_rdds(spark, statics)
+        release_rdds(spark, statics)
         if not ok:
-            _release_rdds(spark, layer_ids)
+            release_rdds(spark, layer_ids)
+
+
+def _peel(ed, ids, k, rounds, n_edges):
+    """``rounds`` rounds of "drop every node with degree < k" over the
+    edge frame ``ed`` (pinned by ``ids``, ``n_edges`` rows), through
+    :func:`_iterate` at every=2: the peel's lineage otherwise stacks
+    two joins + an agg per round, and the frame only ever SHRINKS, so
+    later materializations are cheap. Returns ``(ed, ids, n_edges)``
+    after the final round.
+
+    The count over each fresh checkpoint doubles as the convergence
+    probe: edge counts are monotone non-increasing under peeling, so an
+    unchanged count between two materialization points proves no node
+    was dropped in between — in particular not in the first round
+    after the earlier point — hence every later round is the identity
+    and stopping there is bit-identical to running all ``rounds``.
+    """
+    counts = [n_edges]
+
+    def step(_i, ed):
+        deg = (
+            ed.select(F.explode(F.array("a", "b")).alias("v"))
+            .groupBy("v")
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+        # Filter by the DROPPED set (deg < k) with anti-joins, not the
+        # kept set with semi-joins: every edge endpoint appears in deg
+        # (deg is computed from ed) and ids are non-null, so "both
+        # endpoints kept" ⟺ "neither endpoint dropped" — identical edge
+        # set. The dropped side is the peel CASCADE (shrinks toward
+        # zero as the core stabilizes), so AQE broadcasts it from
+        # runtime size and the surviving edge list is never shuffled
+        # for the filter; worst case (first round of a sparse graph)
+        # the anti-join degrades to the same shuffled join the
+        # semi-join form always paid.
+        drop = deg.filter(F.col("deg") < k).select("v")
+        return ed.join(
+            drop.select(F.col("v").alias("a")), "a", "left_anti"
+        ).join(drop.select(F.col("v").alias("b")), "b", "left_anti")
+
+    def converged(_prev, cur):
+        counts.append(cur.count())
+        return counts[-1] == counts[-2]
+
+    ed, ids, _ = _iterate(ed, ids, step, rounds, every=2, converged=converged)
+    return ed, ids, counts[-1]
 
 
 def kcore_nodes(
@@ -750,85 +783,36 @@ def kcore_nodes(
     engine (and in the unrolled-CTE oracle), where a "loop until no
     change" would make the oracle inexpressible in one SQL statement.
     On graphs this corpus shape produces, peeling stabilizes well
-    inside 8 rounds, and the loop EXITS EARLY at a proven fixpoint:
-    edge counts are monotone non-increasing under peeling, so an
-    unchanged count between two materialization points proves no node
-    was dropped in between — in particular not in the first round
-    after the earlier point — hence every later round is the identity
-    and the early exit is bit-identical to running all ``rounds``
-    (what the unrolled oracle does). At corpus scale this is the
-    difference between paying the full round budget and paying only
-    the cascade's true depth.
+    inside 8 rounds, and the loop EXITS EARLY at a proven fixpoint
+    (:func:`_peel`), bit-identical to running all ``rounds`` (what the
+    unrolled oracle does). At corpus scale this is the difference
+    between paying the full round budget and paying only the cascade's
+    true depth.
 
     Returns (v, core_degree): the node's degree within the surviving
-    subgraph after the final round (NOT its original degree). Storage
-    discipline: the edge frame is re-checkpointed every second round
-    (the shrink makes later checkpoints cheap), superseded blocks
-    released immediately; loop exchanges are sized to the edge list
+    subgraph after the final round (NOT its original degree). The peel
+    is :func:`_peel` (shared with :func:`coreness_grid`); loop
+    exchanges are sized to the edge list
     (storage.scoped_shuffle_width).
     """
     require_at_least("k", k, 1)
     require_at_least("rounds", rounds, 1)
     spark = pairs.sparkSession
-    prev_ids: list = []
-    ok = False
+    ids: list = []
     try:
-        ed = _tracked_checkpoint(pairs, prev_ids)
-        n_edge_rows = ed.count()
-        with scoped_shuffle_width(spark, n_edge_rows):
-            for i in range(rounds):
-                deg = (
-                    ed.select(F.explode(F.array("a", "b")).alias("v"))
-                    .groupBy("v")
-                    .agg(F.count(F.lit(1)).alias("deg"))
-                )
-                # Filter by the DROPPED set (deg < k) with anti-joins,
-                # not the kept set with semi-joins: every edge endpoint
-                # appears in deg (deg is computed from ed) and ids are
-                # non-null, so "both endpoints kept" ⟺ "neither endpoint
-                # dropped" — identical edge set. The dropped side is the
-                # peel CASCADE (shrinks toward zero as the core
-                # stabilizes), so AQE broadcasts it from runtime size
-                # and the surviving edge list is never shuffled for the
-                # filter; worst case (first round of a sparse graph) the
-                # anti-join degrades to the same shuffled join the
-                # semi-join form always paid.
-                drop = deg.filter(F.col("deg") < k).select("v")
-                ed = (
-                    ed.join(
-                        drop.select(F.col("v").alias("a")), "a", "left_anti"
-                    ).join(
-                        drop.select(F.col("v").alias("b")), "b", "left_anti"
-                    )
-                )
-                # checkpoint every second round + the final round: the
-                # peel's lineage otherwise stacks two joins + an agg
-                # per round, and the frame only ever SHRINKS, so later
-                # materializations are cheap
-                if i % 2 == 1 or i == rounds - 1:
-                    round_ids: list = []
-                    ed = _tracked_checkpoint(ed, round_ids)
-                    _release_rdds(spark, prev_ids)
-                    prev_ids = round_ids
-                    # the count over the fresh blocks doubles as the
-                    # convergence probe (docstring: equal counts
-                    # across any gap prove the fixpoint, so breaking
-                    # here cannot change the result)
-                    n_now = ed.count()
-                    if n_now == n_edge_rows:
-                        break
-                    n_edge_rows = n_now
-            out = (
-                ed.select(F.explode(F.array("a", "b")).alias("v"))
-                .groupBy("v")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
-            )
-        ok = True
-        # the FINAL round's blocks back the returned frame and stay
-        return out
-    finally:
-        if not ok:
-            _release_rdds(spark, prev_ids)
+        ed = tracked_checkpoint(pairs, ids)
+        n_edges = ed.count()
+        with scoped_shuffle_width(spark, n_edges):
+            ed, ids, _ = _peel(ed, ids, k, rounds, n_edges)
+    except BaseException:
+        release_rdds(spark, ids)
+        raise
+    # the FINAL round's blocks back the returned frame and stay
+    return (
+        ed.select(F.explode(F.array("a", "b")).alias("v"))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
+    )
 
 
 def coreness_grid(
@@ -857,8 +841,8 @@ def coreness_grid(
     is empty (peeling an empty graph is the identity), so the loop
     stops outright.
 
-    Storage discipline matches kcore_nodes: per-grade checkpoints
-    every second round with tracked release of superseded blocks; the
+    Each grade is one :func:`_peel` (shared with kcore_nodes): its
+    checkpoints every second round release superseded blocks; the
     blocks backing each grade's survivor frame (and the base edges,
     which back the grade-0 node set) live until the caller drops the
     returned frame.
@@ -870,73 +854,37 @@ def coreness_grid(
         )
     spark = pairs.sparkSession
     keep_ids: list = []  # blocks the RETURNED frame depends on
-    ok = False
 
     # no per-frame distinct(): every (v, grade) stream feeds ONE final
     # max-aggregate whose map-side partial combine collapses duplicates
     # before the single shuffle — five distincts' worth of exchanges
     # replaced by one (measured ~5 s at sf0.1)
-    def _nodes(ed):
-        return ed.select(F.explode(F.array("a", "b")).alias("v"))
+    def _nodes(ed, grade):
+        return ed.select(
+            F.explode(F.array("a", "b")).alias("v"), F.lit(grade).alias("grade")
+        )
 
     try:
-        ed = _tracked_checkpoint(pairs, keep_ids)
+        ed = tracked_checkpoint(pairs, keep_ids)
         n_edges = ed.count()
-        grades = [_nodes(ed).select("v", F.lit(0).alias("grade"))]
+        out = _nodes(ed, 0)
         with scoped_shuffle_width(spark, n_edges):
             for k in ks:
                 if n_edges == 0:
                     break  # higher grades peel an empty graph: empty
-                loop_ids: list = []
-                cur = n_edges
-                for i in range(rounds):
-                    deg = (
-                        ed.select(F.explode(F.array("a", "b")).alias("v"))
-                        .groupBy("v")
-                        .agg(F.count(F.lit(1)).alias("deg"))
-                    )
-                    # dropped-set anti-join: see kcore_nodes — same
-                    # edge set, but the (cascade-sized) drop side is
-                    # AQE-broadcastable so the surviving edges are not
-                    # shuffled for the filter
-                    drop = deg.filter(F.col("deg") < k).select("v")
-                    ed = ed.join(
-                        drop.select(F.col("v").alias("a")), "a", "left_anti"
-                    ).join(
-                        drop.select(F.col("v").alias("b")), "b", "left_anti"
-                    )
-                    if i % 2 == 1 or i == rounds - 1:
-                        round_ids: list = []
-                        ed = _tracked_checkpoint(ed, round_ids)
-                        _release_rdds(spark, loop_ids)
-                        loop_ids = round_ids
-                        n_now = ed.count()
-                        if n_now == cur:
-                            break
-                        cur = n_now
-                # this grade's final blocks back its survivor frame
-                keep_ids.extend(loop_ids)
-                n_edges = cur
-                if cur > 0:
-                    grades.append(
-                        _nodes(ed).select("v", F.lit(k).alias("grade"))
-                    )
-            out = grades[0]
-            for g in grades[1:]:
-                out = out.unionByName(g)
-            out = out.groupBy("v").agg(
-                F.max("grade").cast("bigint").alias("coreness")
-            )
-        ok = True
-        return out
-    finally:
-        if not ok:
-            _release_rdds(spark, keep_ids)
+                # the grade's input backs the previous grade: not the
+                # peel's to release
+                ed, ids, n_edges = _peel(ed, [], k, rounds, n_edges)
+                keep_ids.extend(ids)
+                if n_edges > 0:
+                    out = out.unionByName(_nodes(ed, k))
+    except BaseException:
+        release_rdds(spark, keep_ids)
+        raise
+    return out.groupBy("v").agg(F.max("grade").cast("bigint").alias("coreness"))
 
 
-def label_communities(
-    pairs: DataFrame, rounds: int = 3, checkpoint_every: int = 0
-) -> DataFrame:
+def label_communities(pairs: DataFrame, rounds: int = 3) -> DataFrame:
     """Fixed-round SYNCHRONOUS label propagation (LPA, Raghavan et
     al. 2007) over an undirected edge list (canonical a < b,
     distinct): every node starts labeled with itself; each round it
@@ -974,78 +922,57 @@ def label_communities(
     Per-round wire cost is O(E) label rows — never the text, never
     pairs of anything.
 
-    Storage: at the default ``checkpoint_every=0`` the WHOLE loop is
-    one lazy plan — for a shallow fixed prefix that is one job, with
-    the 2·rounds references to the pair construction collapsing to a
-    single runtime stage via ReusedExchange (measured 8.9 s vs 13.3 s
-    for the per-round-eager form at sf0.1: the eager loop pays
-    rounds+1 job submissions and block writes that a bounded-depth
-    lineage never needs — the OPPOSITE trade to connected_components,
-    whose data-dependent round count grows lineage unboundedly).
-    For deep prefixes pass ``checkpoint_every`` (the CC discipline:
-    tracked checkpoints, superseded blocks released immediately).
+    Storage: the WHOLE loop is one lazy plan, with no checkpoint — for
+    a shallow fixed prefix that is one job, with the 2·rounds
+    references to the pair construction collapsing to a single runtime
+    stage via ReusedExchange (measured 8.9 s vs 13.3 s for the
+    per-round-eager form at sf0.1: the eager loop pays rounds+1 job
+    submissions and block writes that a bounded-depth lineage never
+    needs — the OPPOSITE trade to connected_components, whose
+    data-dependent round count grows lineage unboundedly). A deep
+    prefix that needs lineage truncation belongs in :func:`_iterate`,
+    the one owner of the round loops' storage discipline.
 
     Returns ``(v, community, community_size)``.
     """
     require_at_least("rounds", rounds, 1)
-    require_at_least("checkpoint_every", checkpoint_every, 0)
-    spark = pairs.sparkSession
-    owned: list = []
-    ok = False
-    try:
-        sym = pairs.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).unionByName(
-            pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    sym = pairs.select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
+    ).unionByName(
+        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
+    # Round 1 in closed form: labels start as the identity over a
+    # DISTINCT edge list, so every neighbor label occurs exactly once
+    # and the count-then-min argmax reduces to the minimum neighbor id
+    # — one map-side-combinable aggregation replaces the initial
+    # distinct-label build, the first join and both first-round
+    # aggregations. Exact: sym is symmetric, so groupBy(dst) covers
+    # every node, matching the old distinct-over-src node set.
+    labels = sym.groupBy("dst").agg(F.min("src").alias("label"))
+    for _round in range(1, rounds):
+        cnt = (
+            sym.join(
+                labels.select(F.col("dst").alias("src"), "label"),
+                "src",
+            )
+            .groupBy("dst", "label")
+            .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = None
-        for i in range(rounds):
-            if i == 0:
-                # Round 1 in closed form: labels start as the identity
-                # over a DISTINCT edge list, so every neighbor label
-                # occurs exactly once and the count-then-min argmax
-                # reduces to the minimum neighbor id — one
-                # map-side-combinable aggregation replaces the initial
-                # distinct-label build, the first join and both
-                # first-round aggregations. Exact: sym is symmetric, so
-                # groupBy(dst) covers every node, matching the old
-                # distinct-over-src node set.
-                labels = sym.groupBy("dst").agg(F.min("src").alias("label"))
-            else:
-                cnt = (
-                    sym.join(
-                        labels.select(F.col("dst").alias("src"), "label"),
-                        "src",
-                    )
-                    .groupBy("dst", "label")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                )
-                labels = (
-                    cnt.groupBy("dst")
-                    .agg(
-                        F.max(
-                            F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-                        ).alias("m")
-                    )
-                    .select("dst", (-F.col("m")["nl"]).alias("label"))
-                )
-            if checkpoint_every and i % checkpoint_every == checkpoint_every - 1:
-                round_ids: list = []
-                labels = _tracked_checkpoint(labels, round_ids)
-                _release_rdds(spark, owned)
-                owned = round_ids
-        labels = labels.select(F.col("dst").alias("v"), "label")
-        sizes = labels.groupBy("label").agg(
-            F.count(F.lit(1)).cast("bigint").alias("community_size")
+        labels = (
+            cnt.groupBy("dst")
+            .agg(
+                F.max(
+                    F.struct(F.col("c"), (-F.col("label")).alias("nl"))
+                ).alias("m")
+            )
+            .select("dst", (-F.col("m")["nl"]).alias("label"))
         )
-        out = labels.join(sizes, "label").select(
-            "v",
-            F.col("label").cast("bigint").alias("community"),
-            "community_size",
-        )
-        ok = True
-        # any final checkpoint blocks back the returned frame and stay
-        return out
-    finally:
-        if not ok:
-            _release_rdds(spark, owned)
+    labels = labels.select(F.col("dst").alias("v"), "label")
+    sizes = labels.groupBy("label").agg(
+        F.count(F.lit(1)).cast("bigint").alias("community_size")
+    )
+    return labels.join(sizes, "label").select(
+        "v",
+        F.col("label").cast("bigint").alias("community"),
+        "community_size",
+    )

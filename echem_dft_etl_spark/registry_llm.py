@@ -2887,12 +2887,9 @@ def d25_entity_resolution(spark, sf_dir):
     aggregate. The oracle replays matching as the naive quadratic form
     and the closure as a recursive CTE — both stages independently
     proven, here proven composed."""
-    from .operators.components import (
-        _release_rdds,
-        _tracked_checkpoint,
-        connected_components,
-    )
+    from .operators.components import connected_components
     from .operators.fuzzy import fuzzy_match_pairs
+    from .operators.storage import release_rdds, tracked_checkpoint
 
     part = _ld(spark, sf_dir, "part")
     # ONE tracked checkpoint of the narrow blocking base feeds every
@@ -2901,48 +2898,50 @@ def d25_entity_resolution(spark, sf_dir):
     # the catalog groupBy is pinned on top of it because its THREE
     # consumers would otherwise each replay the exchange (r9 trim,
     # same discipline as the r8 CC rewrite). Tracked pins — released
-    # below once the CC loop has materialized its labels — instead of
-    # raw localCheckpoint, which would leak executor storage for the
-    # session lifetime on every invocation.
+    # below once the CC loop has materialized its labels (or on any
+    # failure) — instead of raw localCheckpoint, which would leak
+    # executor storage for the session lifetime on every invocation.
     pins: list = []
-    base = _tracked_checkpoint(part.select("p_partkey", "p_name"), pins)
-    base.count()
-    catalog = _tracked_checkpoint(
-        base.groupBy("p_name")
-        .agg(F.min("p_partkey").alias("name_id"))
-        .select("name_id", F.col("p_name").alias("cname")),
-        pins,
-    )
-    catalog.count()
-    queries = base.select(
-        (F.col("p_partkey") + _ER_OFFSET).alias("qid"),
-        F.expr(
-            f"substr(p_name, 1, {_TYPO_POS} - 1)"
-            f" || substr(p_name, {_TYPO_POS} + 1)"
-        ).alias("qname"),
-    )
-    matches = fuzzy_match_pairs(
-        catalog, queries, "name_id", "cname", "qid", "qname", k=2
-    ).select(F.col("qid").alias("a"), F.col("cat_id").alias("b"))
+    try:
+        base = tracked_checkpoint(part.select("p_partkey", "p_name"), pins)
+        base.count()
+        catalog = tracked_checkpoint(
+            base.groupBy("p_name")
+            .agg(F.min("p_partkey").alias("name_id"))
+            .select("name_id", F.col("p_name").alias("cname")),
+            pins,
+        )
+        catalog.count()
+        queries = base.select(
+            (F.col("p_partkey") + _ER_OFFSET).alias("qid"),
+            F.expr(
+                f"substr(p_name, 1, {_TYPO_POS} - 1)"
+                f" || substr(p_name, {_TYPO_POS} + 1)"
+            ).alias("qname"),
+        )
+        matches = fuzzy_match_pairs(
+            catalog, queries, "name_id", "cname", "qid", "qname", k=2
+        ).select(F.col("qid").alias("a"), F.col("cat_id").alias("b"))
 
-    # No distinct over the union: name_ids are unique by construction
-    # (MIN per name group), qids are unique (one per part row), and
-    # the _ER_OFFSET range split keeps the two populations disjoint —
-    # a distinct here would be a pure-overhead exchange.
-    verts = catalog.select(F.col("name_id").alias("v")).unionByName(
-        queries.select(F.col("qid").alias("v"))
-    )
-    labels = connected_components(
-        verts, matches, id_col="v", src_col="a", dst_col="b",
-        # chained matches give this graph real diameter (8 one-hop
-        # rounds measured at sf0.1): one 8-hop propagate round, then a
-        # single-relax fixpoint confirm — the 2-round floor with the
-        # confirm round at 1/8th the join cost
-        relax_per_round=(8, 1),
-    )
-    # The CC loop materializes eagerly, so nothing downstream reads
-    # the blocking pins anymore: release them before returning.
-    _release_rdds(spark, pins)
+        # No distinct over the union: name_ids are unique by construction
+        # (MIN per name group), qids are unique (one per part row), and
+        # the _ER_OFFSET range split keeps the two populations disjoint —
+        # a distinct here would be a pure-overhead exchange.
+        verts = catalog.select(F.col("name_id").alias("v")).unionByName(
+            queries.select(F.col("qid").alias("v"))
+        )
+        labels = connected_components(
+            verts, matches, id_col="v", src_col="a", dst_col="b",
+            # chained matches give this graph real diameter (8 one-hop
+            # rounds measured at sf0.1): one 8-hop propagate round, then a
+            # single-relax fixpoint confirm — the 2-round floor with the
+            # confirm round at 1/8th the join cost
+            relax_per_round=(8, 1),
+        )
+    finally:
+        # The CC loop materializes eagerly, so nothing downstream reads
+        # the blocking pins anymore: release them before returning.
+        release_rdds(spark, pins)
     return labels.groupBy(F.col("cluster_id").alias("entity_id")).agg(
         F.count("*").alias("n_members"),
         F.sum(F.when(F.col("v") < _ER_OFFSET, 1).otherwise(0))

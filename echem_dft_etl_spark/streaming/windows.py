@@ -293,11 +293,12 @@ def _run_processing_time_inner(
                     and not s["isDataAvailable"]
                     and not s["isTriggerActive"]
                 ):
-                    # three consecutive idle polls (0.3 s of proven
-                    # quiet, same guarantee class as the old 2 x 0.25 s):
-                    # not a gap between file-listing and batch start
+                    # four consecutive idle polls 0.1 s apart (0.3 s of
+                    # proven quiet, same guarantee class as the old
+                    # 2 x 0.25 s): not a gap between file-listing and
+                    # batch start
                     drained_polls += 1
-                    if drained_polls >= 3:
+                    if drained_polls >= 4:
                         break
                 else:
                     drained_polls = 0

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -1063,30 +1064,90 @@ def test_bfs_distances_max_hops_cap(spark):
     assert got == {(0, 0), (1, 1), (2, 2), (3, 3)}
 
 
-def test_bfs_distances_releases_loop_storage(spark):
-    """Static edge blocks and dead layers must not leak into session
-    storage after the result is collected (the CC/PageRank storage
-    discipline applies to BFS too). Layers backing the returned frame
-    are allowed to remain only until the caller drops the frame; here
-    we just bound growth: one bfs call may pin at most the layer
-    count, and the shuffle-width conf is restored."""
-    from echem_dft_etl_spark.operators.components import bfs_distances
-    from echem_dft_etl_spark.operators.storage import (
-        persistent_rdd_ids as _persistent_rdd_ids,
-    )
+#: 4-clique {0, 1, 2, 3} with the tail 3-4-5-6: every graph loop has
+#: rounds to run, and k-core peeling has a tendril to drop.
+_LOOP_EDGES = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (5, 6)]
+
+
+def _loop_case(spark, name):
+    """(result frame, its row count, checkpoints that may back it)."""
+    from echem_dft_etl_spark.operators import components as c
+
+    edges = spark.createDataFrame(_LOOP_EDGES, "a long, b long")
+    if name == "cc":
+        verts = spark.range(7).selectExpr("id AS doc_id")
+        return c.connected_components(verts, edges), 7, 1
+    if name == "forest":
+        chain = spark.createDataFrame(
+            [(0, None)] + [(i, i - 1) for i in range(1, 7)],
+            "node long, parent long",
+        )
+        return c.forest_root_depth(chain), 7, 1
+    if name == "pagerank":
+        sym = edges.selectExpr("a AS src", "b AS dst").unionAll(
+            edges.selectExpr("b AS src", "a AS dst")
+        )
+        return c.integer_pagerank(sym, iterations=5), 7, 1
+    if name == "triangles":
+        return c.triangle_counts(edges), 4, 1  # backed by the adjacency
+    if name == "bfs":
+        seeds = spark.createDataFrame([(6,)], "v long")
+        # the seed layer + 4 discovered layers back the union
+        return c.bfs_distances(edges, seeds, max_hops=8), 7, 5
+    if name == "kcore":
+        return c.kcore_nodes(edges, k=3), 4, 1
+    assert name == "coreness"
+    # base edges (grade 0) + the final peel of each of the two grades
+    return c.coreness_grid(edges, ks=(2, 3)), 7, 3
+
+
+@pytest.mark.parametrize(
+    "name", ["cc", "forest", "pagerank", "triangles", "bfs", "kcore", "coreness"]
+)
+def test_graph_loop_releases_storage(spark, name):
+    """Static frames and superseded rounds must not leak into session
+    storage after the result is collected. Blocks backing the returned
+    frame may remain until the caller drops the frame, so pinned growth
+    is bounded by those; the loop's shuffle-width override is restored."""
+    from echem_dft_etl_spark.operators.storage import persistent_rdd_ids
 
     width_before = spark.conf.get("spark.sql.shuffle.partitions")
-    before = _persistent_rdd_ids(spark)
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(6)], "a long, b long"
-    )
-    seeds = spark.createDataFrame([(0,)], "v long")
-    res = bfs_distances(edges, seeds, max_hops=8)
-    assert res.count() == 7
+    before = persistent_rdd_ids(spark)
+    res, n_rows, n_backing = _loop_case(spark, name)
+    assert res.count() == n_rows
     assert spark.conf.get("spark.sql.shuffle.partitions") == width_before
-    pinned = _persistent_rdd_ids(spark) - before
-    # seeds layer + 6 discovered layers back the frame; statics released
-    assert len(pinned) <= 8, pinned
+    pinned = persistent_rdd_ids(spark) - before
+    assert len(pinned) <= n_backing, pinned
+
+
+@pytest.mark.parametrize("name", ["cc", "forest"])
+def test_graph_loop_no_fixpoint_releases_storage(spark, name):
+    """A loop that runs out of rounds raises, and every block it pinned
+    (statics, the entry state, the last round) is released."""
+    from echem_dft_etl_spark.operators import components as c
+    from echem_dft_etl_spark.operators.storage import persistent_rdd_ids
+
+    width_before = spark.conf.get("spark.sql.shuffle.partitions")
+    before = persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        if name == "cc":
+            c.connected_components(
+                spark.range(10).selectExpr("id AS doc_id"),
+                spark.createDataFrame(
+                    [(i, i + 1) for i in range(9)], "a long, b long"
+                ),
+                max_rounds=1,
+            )
+        else:
+            c.forest_root_depth(
+                spark.createDataFrame(
+                    [(0, None)] + [(i, i - 1) for i in range(1, 10)],
+                    "node long, parent long",
+                ),
+                max_rounds=1,
+            )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width_before
+    assert persistent_rdd_ids(spark) - before == set()
 
 
 def test_weighted_sample_prefers_heavy_weights(spark, tmp_path):
@@ -1973,7 +2034,7 @@ def test_triangle_counts_match_bruteforce(spark):
     pairs = spark.createDataFrame(edges, "a long, b long")
     got = {
         r["v"]: r["n_triangles"]
-        for r in triangle_counts(pairs, checkpoint=True).collect()
+        for r in triangle_counts(pairs).collect()
     }
     assert got == want
     assert sum(want.values()) > 30, "fixture too sparse to prove anything"
