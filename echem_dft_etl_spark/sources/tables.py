@@ -10,18 +10,31 @@ automatically (verified in tests/test_plans.py).
 At the 100 TB design point each "table" would be a partitioned parquet
 dataset (or an Iceberg/Delta table); a single ``spark.read.parquet`` on
 the root directory keeps that swap a one-liner.
+
+Spark infers a parquet schema with a Spark job (a footer merge, even for
+one file), which costs more than the rest of a small scan. The reference
+pipeline extracts its source once per DAG run (``my_dag.py:28-29``);
+here every query loads its own tables, so :func:`read_parquet` infers a
+file's schema once per file version (path, inode, mtime, size, and the
+confs that change inferred types) and later reads of the unchanged file
+pass that schema to the reader. Only schemas are kept, never DataFrames:
+every load still builds a fresh relation with fresh attribute ids, so
+self-joins of two loads and DataFrame-bound column references resolve
+exactly as without the memo.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
+import stat
 import tempfile
 import zipfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 #: The driver-generated corpus (TESTDATA.md): TPC-H-ish star schema plus
 #: event-stream / document / embedding tables.
@@ -61,8 +74,6 @@ def _package_zip() -> str:
         # rename publishes an always-complete archive under the
         # content-addressed name
         fd, tmp = tempfile.mkstemp(suffix=".zip", dir=out.parent)
-        import os
-
         os.close(fd)
         with zipfile.ZipFile(tmp, "w") as z:
             for f in files:
@@ -110,12 +121,67 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one corpus table. Schema-on-read from the parquet footer."""
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    prepare_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+#: Confs that change the schema Spark infers from parquet footers: the
+#: first four change column types, ``mergeSchema`` the columns of a
+#: directory whose part files differ.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: realpath -> (file version and inference confs, inferred schema). One
+#: entry per path, replaced when the path goes stale, so the memo is
+#: bounded by the number of distinct paths read.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_version(path: str) -> tuple:
+    """``(st_ino, st_mtime_ns, st_size)`` of a file; for a directory,
+    the sorted stats of every file under it."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return ((st.st_ino, st.st_mtime_ns, st.st_size),)
+    parts = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            fst = os.stat(p)
+            parts.append(
+                (os.path.relpath(p, path), fst.st_ino, fst.st_mtime_ns, fst.st_size)
+            )
+    return tuple(sorted(parts))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per file
+    version.
+
+    The first read of a file infers its schema as Spark always does;
+    later reads of the same unchanged file hand that schema to the
+    reader, which skips the inference job. The file is stat-ed before
+    it is read, so a file that changes mid-read leaves a stale key that
+    the next read replaces. Paths that cannot be stat-ed locally (other
+    file systems) are read without the memo.
+    """
+    real = os.path.realpath(path)
+    try:
+        version = _file_version(real)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (version, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[real] = (key, df.schema)
+    return df
+
+
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
@@ -133,6 +199,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one corpus table. The schema comes from the parquet footer,
+    inferred once per file version (:func:`read_parquet`); every call
+    returns a fresh relation, never a cached DataFrame."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    prepare_session(spark)
+    return _scan(spark, sf_dir, name)
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every corpus table as a temp view for ``spark.sql``.
 
@@ -140,5 +216,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     ``dft_echem``, SURVEY.md §3 entry point 3): any SQL client of the
     session can query the same tables the DataFrame API sees.
     """
+    prepare_session(spark)
     for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        _scan(spark, sf_dir, name).createOrReplaceTempView(name)

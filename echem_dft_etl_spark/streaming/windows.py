@@ -21,7 +21,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table, prepare_session
+from ..sources.tables import load_table, prepare_session, read_parquet
 
 #: Shuffle width (= state-store instances per stateful operator) for the
 #: bounded fixture replays. Stateful streams instantiate one state store
@@ -61,11 +61,12 @@ def read_table_stream(
     spark: SparkSession, sf_dir: str, table: str
 ) -> DataFrame:
     """Open ANY corpus table as a bounded stream (availableNow replay)
-    — schema from a batch peek (streaming readers need it up front),
-    no column normalization. Use :func:`read_events_stream` for events
+    — schema from a batch peek (streaming readers need it up front;
+    the peek shares the loaders' per-file-version schema memo), no
+    column normalization. Use :func:`read_events_stream` for events
     (it additionally normalizes the ts vintage)."""
     prepare_session(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    raw_schema = read_parquet(spark, f"{sf_dir}/{table}.parquet").schema
     return spark.readStream.schema(raw_schema).parquet(
         _as_stream_dir(sf_dir, table)
     )

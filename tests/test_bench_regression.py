@@ -33,7 +33,9 @@ commit time. This module is the commit-time tripwire:
 
 The live gate skips when the working-tree artifact itself is
 wholesale-contaminated (suite loadavg_start above the bar, or the
-bench's own load gate recorded a waiver): per-query calls from such an
+bench's own load gate recorded a waiver) or stamped with a core count
+other than the baseline's (VERDICT r13: an 8-core run judged against
+32-core minima): per-query calls from such an
 artifact are exactly the unreliable comparisons bench_compare.py warns
 about. bench.py's r11 load gate exists to make clean artifacts the
 norm.
@@ -67,6 +69,9 @@ THRESHOLD = 1.5
 #: comfortably; any regression too small to clear it is also too
 #: small to matter against a 250 s suite.
 ABS_EXCESS_S = 1.0
+#: Core count every ``BENCH_BASELINE.json`` minimum was recorded at. A
+#: detail artifact stamped with another count is not compared with it.
+BASELINE_CPUS = 32
 
 
 def _current_min(samples, loads, load_bar):
@@ -154,6 +159,15 @@ def find_regressions(
 
 
 def _artifact_is_contaminated(detail: dict) -> str | None:
+    cpus = detail.get("cpus")
+    if cpus is not None and cpus != BASELINE_CPUS:
+        # the best-ever minima are 32-core runs; at sf0.1 fixed costs
+        # dominate, so a few queries (mm_decode_features) measure the
+        # core count, not the plan
+        return (
+            f"artifact ran on {cpus} cpus; best-ever minima were "
+            f"recorded at {BASELINE_CPUS}"
+        )
     start = detail.get("loadavg_start") or []
     if start and start[0] > LOAD_BAR:
         return f"suite started at loadavg {start[0]} > {LOAD_BAR}"
@@ -189,6 +203,33 @@ def test_gate_catches_the_r10_pagerank_regression():
     assert [h["query"] for h in hits] == ["x05_pagerank"]
     assert hits[0]["under_load"] is True
     assert hits[0]["ratio"] > 1.5
+
+
+def test_gate_skips_the_r13_eight_core_false_positive():
+    """VERDICT r13: an 8-core ``bench.py`` run overwrote the
+    artifact and the gate reported ``mm_decode_features`` at 3.20×
+    (best-ever 1.303 s, recorded at 32 cores, against 4.171 s at 8
+    cores). The per-query rule still sees the ratio; the artifact's
+    core count keeps it from being judged at all."""
+    detail = {
+        "cpus": 8,
+        "sf": 0.1,
+        "loadavg_start": [2.0, 2.99, 3.0],
+        "runs": {
+            "mm_decode_features": [4.171],
+            "x05_bfs_distances": [4.27, 4.41],
+        },
+    }
+    baseline = {
+        "mm_decode_features": {"min_seconds": 1.303},
+        "x05_bfs_distances": {"min_seconds": 4.27},
+    }
+    assert [h["query"] for h in find_regressions(detail, baseline)] == [
+        "mm_decode_features"
+    ]
+    reason = _artifact_is_contaminated(detail)
+    assert reason is not None and "8 cpus" in reason
+    assert _artifact_is_contaminated({**detail, "cpus": BASELINE_CPUS}) is None
 
 
 def test_gate_does_not_flag_wholesale_host_drift():
