@@ -2475,21 +2475,24 @@ def x10_stream_custom_source(spark, sf_dir):
     position in the sorted listing, replayable via readBetweenOffsets —
     and the reference's last-match parse runs as a streaming
     aggregation (complete mode). Driven by the processingTime
-    continuous mode with the status-based drain watch
-    (run_processing_time): the simple Python stream reader prefetches
-    one batch per trigger, so availableNow would stop after the first
-    prefetch — the periodic trigger drains all 4 batches and the
-    watch stops the query when the source reports empty. Proves the
+    continuous mode through ``run_to_memory(..., until=...)``: the
+    simple Python stream reader prefetches one batch per trigger, so
+    availableNow would stop after the first prefetch — the periodic
+    trigger drains all 4 batches, and the query stops once the source's
+    offset reaches ``{"files_done": <files in the listing>}``, a proof
+    from offsets rather than from a quiet window. Proves the
     streaming layer composes with user-defined sources exactly like
     built-in ones: same parse expressions as the batch connector row
     (s02_custom_datasource), same oracle arithmetic, results equal to
     batch on replay (SURVEY §7 streaming-state discipline)."""
+    import os
+
     from .sources.solver_out import (
         build_solver_out_fixture,
         make_solver_out_datasource,
         make_solver_out_stream_datasource,
     )
-    from .streaming.windows import run_processing_time
+    from .streaming.windows import run_to_memory
 
     path = build_solver_out_fixture(spark, sf_dir)
     spark.dataSource.register(make_solver_out_stream_datasource())
@@ -2533,10 +2536,13 @@ def x10_stream_custom_source(spark, sf_dir):
         F.count("*").alias("n_fillings"),
         F.max_by("mu", F.col("line_no")).alias("mu"),
     )
-    # 100 ms cadence: the corpus is bounded (7 micro-batches), so the
-    # trigger interval is pure idle time between prefetched batches —
-    # production cadence is a latency/cost knob, not a semantics one
-    return run_processing_time(agg, spark, mode="complete", interval="100 milliseconds")
+    # the fixture is complete before the stream starts, so its listing
+    # is the end offset; the driver's 100 ms trigger cadence only sets
+    # the idle time between prefetched batches, not what is read
+    n_files = sum(1 for n in os.listdir(path) if n.endswith(".out"))
+    return run_to_memory(
+        agg, spark, mode="complete", until={"files_done": n_files}
+    )
 
 
 @_register(
@@ -5441,11 +5447,9 @@ def x10_stream_cusum(spark, sf_dir):
         F.col("event_id").alias("pid"),
         F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
     )
-    # width 8: per-key Python execution, not state commits, is the
-    # per-batch cost here (see run_to_memory's state_width note)
-    out = run_to_memory(
-        user_cusum_alarms(ev), spark, mode="update", state_width=8
-    )
+    # default state width: a width-8 pin lost every interleaved round
+    # against it (plans/r14/ab_cusum_width.json)
+    out = run_to_memory(user_cusum_alarms(ev), spark, mode="update")
     w = W.partitionBy("user_id").orderBy(F.col("version").desc())
     return (
         out.withColumn("_rn", F.row_number().over(w))
@@ -6906,67 +6910,60 @@ def x10_stream_custom_sink(spark, sf_dir):
     and aggregated; the oracle replays the same aggregation from the
     events table, so a green row proves stream → write → commit →
     manifest → read-back end-to-end. Reentrant via the s01 pattern
-    (per-invocation scratch dirs, deleted before return); one retry
-    for the local-master transient-worker-death class
-    (run_to_memory's rationale)."""
+    (per-attempt scratch dirs, all deleted before return on every
+    path); the stream runs through the shared bounded-stream driver
+    (streaming/windows.py::_run_bounded: availableNow, one logged
+    retry)."""
     import shutil
 
     from .sources.report_sink import make_report_stream_sink_datasource
-    from .streaming.windows import read_events_stream
+    from .streaming.windows import _run_bounded, read_events_stream
 
     spark.dataSource.register(make_report_stream_sink_datasource())
-    last_exc: Exception | None = None
-    for _attempt in range(2):
-        out = _scratch_dir("echem_stream_sink_")
-        ck = _scratch_dir("echem_stream_sink_ck_")
-        try:
-            # Tab-delimited, not comma: an event_type containing a
-            # comma would shift user_id into the wrong field and
-            # silently corrupt the checksum. Tab cannot appear in a
-            # line-oriented text sink's fields.
-            lines = read_events_stream(spark, sf_dir).select(
-                F.concat_ws(
-                    "\t", "event_type", F.col("user_id").cast("string")
-                ).alias("value")
-            )
-            q = (
-                lines.writeStream.format("reportsink_stream")
-                .option("path", out)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    # Tab-delimited, not comma: an event_type containing a comma would
+    # shift user_id into the wrong field and silently corrupt the
+    # checksum. Tab cannot appear in a line-oriented text sink's fields.
+    lines = read_events_stream(spark, sf_dir).select(
+        F.concat_ws("\t", "event_type", F.col("user_id").cast("string")).alias(
+            "value"
+        )
+    )
+    dirs: list[str] = []  # [ck, out] per attempt; the last out committed
 
-            manifests = spark.read.option("multiLine", "true").json(
-                f"{out}/manifest-*.json"
-            )
-            committed = manifests.select(
-                F.explode("parts").alias("p")
-            ).select("p.file", "p.n_rows")
-            files = [r["file"] for r in committed.select("file").collect()]
-            manifest_rows = committed.agg(
-                F.sum("n_rows").cast("bigint")
-            ).collect()[0][0]
-            parsed = spark.read.text(
-                [f"{out}/{name}" for name in files]
-            ).select(
-                F.split("value", "\t").alias("f")
-            ).select(
-                F.col("f")[0].alias("event_type"),
-                F.col("f")[1].cast("bigint").alias("user_id"),
-            )
-            result = parsed.groupBy("event_type").agg(
-                F.count("*").cast("bigint").alias("n_events"),
-                F.countDistinct("user_id").cast("bigint").alias("n_users"),
-                F.sum("user_id").cast("bigint").alias("user_checksum"),
-            ).withColumn(
-                "manifest_rows", F.lit(manifest_rows).cast("bigint")
-            )
-            return _literal_result(spark, result)
-        except Exception as exc:  # pragma: no cover - transient worker death
-            last_exc = exc
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
-            shutil.rmtree(ck, ignore_errors=True)
-    raise last_exc
+    def writer():
+        dirs.append(_scratch_dir("echem_stream_sink_ck_"))
+        dirs.append(_scratch_dir("echem_stream_sink_"))
+        return (
+            lines.writeStream.format("reportsink_stream")
+            .option("path", dirs[-1])
+            .option("checkpointLocation", dirs[-2])
+        )
+
+    try:
+        _run_bounded(spark, writer)
+        out = dirs[-1]
+        manifests = spark.read.option("multiLine", "true").json(
+            f"{out}/manifest-*.json"
+        )
+        committed = manifests.select(F.explode("parts").alias("p")).select(
+            "p.file", "p.n_rows"
+        )
+        files = [r["file"] for r in committed.select("file").collect()]
+        manifest_rows = committed.agg(
+            F.sum("n_rows").cast("bigint")
+        ).collect()[0][0]
+        parsed = spark.read.text([f"{out}/{name}" for name in files]).select(
+            F.split("value", "\t").alias("f")
+        ).select(
+            F.col("f")[0].alias("event_type"),
+            F.col("f")[1].cast("bigint").alias("user_id"),
+        )
+        result = parsed.groupBy("event_type").agg(
+            F.count("*").cast("bigint").alias("n_events"),
+            F.countDistinct("user_id").cast("bigint").alias("n_users"),
+            F.sum("user_id").cast("bigint").alias("user_checksum"),
+        ).withColumn("manifest_rows", F.lit(manifest_rows).cast("bigint"))
+        return _literal_result(spark, result)
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)

@@ -355,7 +355,10 @@ def merge_parquet(
     else:
         version, merged = 0, batch
     new_path = f"{table_root}/snap_{version + 1:010d}"
-    merged.write.parquet(new_path)  # _SUCCESS written last = commit
+    # overwrite: a dir at v+1 can only be a crashed writer's torn,
+    # uncommitted output (single writer), which would otherwise block
+    # every later write to this table
+    merged.write.mode("overwrite").parquet(new_path)  # _SUCCESS last = commit
     _prune_snapshots(spark, table_root, keep_snapshots)
     return spark.read.parquet(new_path)
 
@@ -411,7 +414,8 @@ def delete_keys_parquet(
         delete_keys.select(*key_cols).distinct(), key_cols, "left_anti"
     )
     new_path = f"{table_root}/snap_{version + 1:010d}"
-    kept.write.parquet(new_path)  # _SUCCESS written last = commit
+    # overwrite a torn v+1 dir: see merge_parquet
+    kept.write.mode("overwrite").parquet(new_path)  # _SUCCESS last = commit
     _prune_snapshots(spark, table_root, keep_snapshots)
     return spark.read.parquet(new_path)
 
@@ -746,7 +750,8 @@ def compact_dv(
     else:
         cleaned = current
     new_path = f"{table_root}/snap_{version + 1:010d}"
-    cleaned.write.parquet(new_path)  # _SUCCESS written last = commit
+    # overwrite a torn v+1 dir: see merge_parquet
+    cleaned.write.mode("overwrite").parquet(new_path)  # _SUCCESS last = commit
     _prune_snapshots(spark, table_root, keep_snapshots)
     # vacuum ONLY the sidecars folded above: they are orphaned the
     # instant the new snapshot commits, and nothing else ever deletes

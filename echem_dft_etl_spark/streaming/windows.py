@@ -8,20 +8,31 @@ watermarks; results are replay-checked against the batch forms in
 ``operators/sessions.py`` (the DuckDB-checkable correctness proxies,
 SURVEY §7 streaming-state risk note).
 
-Everything here runs with ``trigger(availableNow=True)`` against the
-parquet events table in tests — the same code takes a Kafka/file stream
-at scale; only the reader line changes.
+Every bounded stream here runs through one driver, :func:`_run_bounded`,
+in one of two completion modes:
+
+- ``until=None``: ``trigger(availableNow=True)``; Spark itself ends the
+  query once everything the source listed at start is processed. The
+  parquet replays use this — the same code takes a Kafka/file stream at
+  scale; only the reader line changes.
+- ``until=<offset>``: a 100 ms ``processingTime`` trigger (the
+  continuous mode, SURVEY §1.2); the query is stopped once the source
+  reports ``endOffset == until`` with no trigger in flight. Completion
+  is proven from the source's offsets, never from a quiet-time window,
+  so files that arrive late are still read.
 """
 
 from __future__ import annotations
 
-import os
+import ast
+import logging
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table, prepare_session, read_parquet
+from ..sources.tables import prepare_session, read_parquet
 
 #: Shuffle width (= state-store instances per stateful operator) for the
 #: bounded fixture replays. Stateful streams instantiate one state store
@@ -36,9 +47,16 @@ from ..sources.tables import load_table, prepare_session, read_parquet
 #: plans/r13/stream_phase_before.json phase splits attribute the gap to
 #: state-store commits). A production deployment sizes this ONCE at
 #: first start from its key cardinality (the checkpoint then pins it for
-#: the query's lifetime) — that is why it is an env knob and not a
-#: constant buried in the runner.
-STREAM_STATE_WIDTH = int(os.environ.get("SPARK_GRAFT_STREAM_WIDTH", "4"))
+#: the query's lifetime); callers whose per-batch cost is not state
+#: commits pass ``state_width``.
+STREAM_STATE_WIDTH = 4
+
+#: Hang guard for ``until`` streams: a source that has not reached its
+#: target offset after this long is a fault and raises ``TimeoutError``.
+#: It is a safety check, never a completion test.
+_HANG_GUARD_S = 120.0
+
+_log = logging.getLogger(__name__)
 
 
 def _as_stream_dir(sf_dir: str, table: str = "events") -> str:
@@ -158,14 +176,111 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> Data
     )
 
 
+def _offset(raw):
+    """A source's progress ``endOffset`` as a dict. The built-in file
+    source reports the parsed JSON (``{'logOffset': 0}``); a Python data
+    source reports the str() of its dict (``"{'files_done': 7}"``), so a
+    raw ``==`` against the target would never match."""
+    return ast.literal_eval(raw) if isinstance(raw, str) else raw
+
+
+def _await_offset(q, until: dict) -> None:
+    """Block until every source of ``q`` reports ``endOffset == until``
+    and no trigger is active; a failed query raises here."""
+    deadline = time.monotonic() + _HANG_GUARD_S
+    while not q.awaitTermination(0.1):  # raises if the query failed
+        if (
+            (p := q.lastProgress) is not None
+            and all(_offset(s["endOffset"]) == until for s in p["sources"])
+            and not q.status["isTriggerActive"]
+        ):
+            return
+        if time.monotonic() > deadline:
+            raise TimeoutError(
+                f"stream did not reach offset {until} in {_HANG_GUARD_S}s"
+            )
+    raise RuntimeError(f"stream stopped before reaching offset {until}")
+
+
+def _run_bounded(
+    spark: SparkSession,
+    writer,
+    *,
+    state_width: int | None = None,
+    until: dict | None = None,
+) -> None:
+    """Run a bounded stream to completion: the one owner of the
+    state-store width, the trigger, completion, the stop and the retry.
+
+    ``writer()`` returns a fresh, unstarted ``DataStreamWriter`` (sink,
+    mode and options set, no trigger) for each attempt. The shuffle
+    width is narrowed to ``min(session, state_width or
+    STREAM_STATE_WIDTH)`` for the query's lifetime — the width is baked
+    in at stream START — and restored after. ``until=None`` runs
+    availableNow and awaits termination; ``until=<offset>`` runs a
+    100 ms processingTime trigger and stops the query once the source's
+    offset proves it has read everything (see the module docstring).
+
+    One retry: local masters run with task.maxFailures=1, so a single
+    transient executor/worker hiccup aborts the whole query — a failure
+    class a real cluster absorbs with task retries. The first failure is
+    logged as a warning; a second one raises, chained to the first.
+    """
+    conf_key = "spark.sql.shuffle.partitions"
+    saved_width = spark.conf.get(conf_key)
+    width = STREAM_STATE_WIDTH if state_width is None else state_width
+    trigger = (
+        {"availableNow": True}
+        if until is None
+        else {"processingTime": "100 milliseconds"}
+    )
+    first: Exception | None = None
+    try:
+        spark.conf.set(conf_key, str(min(int(saved_width), width)))
+        for _attempt in range(2):
+            q = writer().trigger(**trigger).start()
+            try:
+                if until is None:
+                    q.awaitTermination()
+                else:
+                    _await_offset(q, until)
+                return
+            except Exception as exc:  # StreamingQueryException and kin
+                if first is not None:
+                    raise exc from first
+                _log.warning(
+                    "bounded stream failed, retrying once: %s: %s",
+                    type(exc).__name__,
+                    exc,
+                )
+                first = exc
+            finally:
+                q.stop()
+    finally:
+        spark.conf.set(conf_key, saved_width)
+
+
 def run_to_memory(
     stream_df: DataFrame,
     spark: SparkSession,
     mode: str = "append",
     state_width: int | None = None,
+    until: dict | None = None,
 ) -> DataFrame:
-    """Execute a bounded stream with availableNow into a memory sink and
-    return the materialized result as a batch DataFrame.
+    """Execute a bounded stream into a memory sink and return the
+    materialized result as a batch DataFrame.
+
+    ``until=None`` replays with availableNow. Sources that availableNow
+    cannot drain (the simple Python stream reader prefetches one batch
+    per trigger, so availableNow stops after the first) pass the offset
+    that marks their end, e.g. ``{"files_done": 25}``; the stream then
+    runs under a processingTime trigger until the source reports that
+    offset. Trigger cadence moves batch boundaries only — every operator
+    here follows watermark, not trigger, semantics — so both modes give
+    the same rows (asserted in tests/test_streaming.py). With ``until``
+    the driver does not wait for a watermark-only no-data batch after the
+    last data batch: use it with complete/update mode, or append streams
+    without a watermark.
 
     Mode notes for bounded replays: time-window aggregations can use
     'complete' (all windows emitted regardless of watermark); session
@@ -174,149 +289,29 @@ def run_to_memory(
     withheld, and replay checks against batch must compare only sessions
     ending below ``max(ts) − watermark``.
 
-    One retry on failure: local masters run with task.maxFailures=1, so
-    a single transient executor/worker hiccup aborts the whole query —
-    a failure class a real cluster absorbs with task retries. The
-    bounded replay is deterministic and side-effect-free (fresh memory
-    sink per attempt), so a retry cannot change results.
-
-    Stateful stream operators (aggregations, stream-stream joins,
-    dedup) instantiate ONE STATE STORE per shuffle partition and pay a
-    per-partition commit every micro-batch; the batch-oriented session
-    width (32) makes bounded fixture replays spend most of their time
-    in near-empty store commits. The runner narrows the width for the
-    query's lifetime (the width is baked in at stream START and, for a
-    checkpointed production query, pinned by the checkpoint — sized
-    once to key cardinality there) and restores it after.
+    A failed attempt is logged and retried once with a fresh memory sink
+    (the bounded replay is deterministic and side-effect-free, so a
+    retry cannot change results); a second failure raises, chained to
+    the first.
 
     ``state_width`` overrides :data:`STREAM_STATE_WIDTH` for streams
     whose per-batch cost is NOT the state commits: the
     ``applyInPandasWithState`` operators execute per-key Python work
     per batch, so their width is Python-task parallelism first and
     commit count second (measured interleaved A/B at sf0.1:
-    stateful_profile 1.63 s at width 8 vs 2.30 s at width 4, cusum
-    1.72 vs 2.10 — the inverse of the built-in stateful operators).
+    stateful_profile 1.63 s at width 8 vs 2.30 s at width 4).
     """
-    conf_key = "spark.sql.shuffle.partitions"
-    saved_width = spark.conf.get(conf_key)
-    width = state_width if state_width is not None else STREAM_STATE_WIDTH
-    last_exc: Exception | None = None
-    try:
-        spark.conf.set(conf_key, str(min(int(saved_width), width)))
-        for _attempt in range(2):
-            name = f"sink_{uuid.uuid4().hex[:12]}"
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                return spark.table(name)
-            except Exception as exc:  # StreamingQueryException and kin
-                last_exc = exc
-    finally:
-        spark.conf.set(conf_key, saved_width)
-    raise last_exc
-
-
-def run_processing_time(
-    stream_df: DataFrame,
-    spark: SparkSession,
-    mode: str = "append",
-    interval: str = "500 milliseconds",
-    drain_timeout: float = 120.0,
-) -> DataFrame:
-    """Execute a stream under a periodic ``processingTime`` trigger —
-    the CONTINUOUS operation mode (SURVEY §1.2): the query stays up and
-    fires micro-batches on a wall-clock cadence, unlike the bounded
-    ``availableNow`` replays used everywhere else here.
-
-    Against a bounded source this drains in the first few triggers;
-    the helper watches the query STATUS (not progress events — idle
-    triggers don't run batches, and no-data progress is only emitted
-    every ~10 s) until the source reports no data available with no
-    trigger in flight after ≥ 1 non-empty batch, then stops the query
-    and returns the memory-sink table. Results are identical to the
-    availableNow replay of the same plan — asserted in
-    tests/test_streaming.py — because trigger cadence changes only
-    batch BOUNDARIES, and every operator here is
-    batch-boundary-agnostic (watermark semantics, not trigger
-    semantics). On an unbounded source, callers own the lifecycle:
-    start the writeStream themselves and skip the drain watch.
-
-    One retry on transient failure, same rationale as
-    :func:`run_to_memory` (local masters run task.maxFailures=1).
-    """
-    conf_key = "spark.sql.shuffle.partitions"
-    saved_width = spark.conf.get(conf_key)
-    try:
-        # Same state-store-width rationale as run_to_memory.
-        spark.conf.set(conf_key, str(min(int(saved_width), STREAM_STATE_WIDTH)))
-        return _run_processing_time_inner(
-            stream_df, spark, mode, interval, drain_timeout
-        )
-    finally:
-        spark.conf.set(conf_key, saved_width)
-
-
-def _run_processing_time_inner(
-    stream_df: DataFrame,
-    spark: SparkSession,
-    mode: str,
-    interval: str,
-    drain_timeout: float,
-) -> DataFrame:
-    import time
-
-    last_exc: Exception | None = None
-    for _attempt in range(2):
-        name = f"sink_{uuid.uuid4().hex[:12]}"
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(processingTime=interval)
-            .start()
-        )
-        try:
-            deadline = time.monotonic() + drain_timeout
-            drained_polls = 0
-            while time.monotonic() < deadline:
-                if q.exception() is not None:
-                    raise q.exception()
-                p = q.lastProgress
-                s = q.status
-                if (
-                    p is not None
-                    and not s["isDataAvailable"]
-                    and not s["isTriggerActive"]
-                ):
-                    # four consecutive idle polls 0.1 s apart (0.3 s of
-                    # proven quiet, same guarantee class as the old
-                    # 2 x 0.25 s): not a gap between file-listing and
-                    # batch start
-                    drained_polls += 1
-                    if drained_polls >= 4:
-                        break
-                else:
-                    drained_polls = 0
-                # 0.1 s cadence: the watch is pure idle time after the
-                # last batch; finer polls shave the post-drain tail
-                # without loosening the two-phase quiet proof above
-                time.sleep(0.1)
-            else:
-                raise TimeoutError(
-                    f"stream did not drain in {drain_timeout}s"
-                )
-            return spark.table(name)
-        except Exception as exc:
-            last_exc = exc
-        finally:
-            q.stop()
-    raise last_exc
+    # one sink name per call: a retry's sink replaces the failed one's view
+    name = f"sink_{uuid.uuid4().hex[:12]}"
+    _run_bounded(
+        spark,
+        lambda: stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode),
+        state_width=state_width,
+        until=until,
+    )
+    return spark.table(name)
 
 
 def stream_interval_join(
@@ -408,13 +403,11 @@ def stream_merge_latest(
     determinism a naive per-batch argmax + blind upsert does NOT have.
 
     Returns the final table state read back from the last committed
-    snapshot. Bounded replay via ``availableNow``; one retry like
-    :func:`run_to_memory` (fresh state dir per attempt, merge snapshot
-    versioning makes the second attempt's commits supersede torn
-    first-attempt output). In production the same code runs unbounded
-    with a watermark-bounded state TTL and per-file merge pruning in a
-    real table format (the merge_parquet docstring's Delta swap
-    point).
+    snapshot. Bounded availableNow replay through :func:`_run_bounded`
+    (narrowed state-store width, one logged retry). In production the
+    same code runs unbounded with a watermark-bounded state TTL and
+    per-file merge pruning in a real table format (the merge_parquet
+    docstring's Delta swap point).
     """
     from ..sources import sinks
 
@@ -447,36 +440,12 @@ def stream_merge_latest(
             bdf, table_root, ["user_id"], "user_id", keep_snapshots=1
         )
 
-    # A streaming aggregation instantiates one STATE STORE per shuffle
-    # partition, and every micro-batch pays a commit (delta file +
-    # fsync) per instance — at the session's batch-oriented width (32)
-    # that is 32 commits per batch for a per-user state that fits in a
-    # handful of partitions. Same width discipline as the
-    # connected_components loop: narrow for the bounded fixture,
-    # restore on exit; a production deployment sizes this to its key
-    # cardinality ONCE at first start (the width is then pinned in the
-    # checkpoint for the query's lifetime).
-    conf_key = "spark.sql.shuffle.partitions"
-    saved_width = spark.conf.get(conf_key)
-    last_exc: Exception | None = None
-    try:
-        spark.conf.set(conf_key, str(min(int(saved_width), STREAM_STATE_WIDTH)))
-        for _attempt in range(2):
-            q = (
-                latest.writeStream.outputMode("update")
-                .foreachBatch(write_batch)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-                last_exc = None
-                break
-            except Exception as exc:  # StreamingQueryException and kin
-                last_exc = exc
-    finally:
-        spark.conf.set(conf_key, saved_width)
-    if last_exc is not None:
-        raise last_exc
+    # state-store width and retry: see _run_bounded (a fresh state dir
+    # per attempt; merge snapshot versioning makes the second attempt's
+    # commits supersede torn first-attempt output)
+    _run_bounded(
+        spark,
+        lambda: latest.writeStream.outputMode("update").foreachBatch(write_batch),
+    )
     snaps = sinks._committed_snapshots(spark, table_root)
     return spark.read.parquet(snaps[-1][1])

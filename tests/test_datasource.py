@@ -290,6 +290,7 @@ def test_stream_foreachbatch_into_report_sink(spark, tmp_path):
         build_solver_out_fixture,
         make_solver_out_stream_datasource,
     )
+    from echem_dft_etl_spark.streaming.windows import _run_bounded
     from tests.conftest import SF_SMOKE
 
     spark.dataSource.register(make_report_sink_datasource())
@@ -319,35 +320,16 @@ def test_stream_foreachbatch_into_report_sink(spark, tmp_path):
             .save()
         )
 
-    # processingTime + status drain, NOT availableNow: the simple
-    # stream reader prefetches one batch per trigger, so availableNow
-    # stops after the first prefetch (same finding as
-    # x10_stream_custom_source)
-    import time
-
-    q = (
-        lines.writeStream.foreachBatch(land)
-        .trigger(processingTime="100 milliseconds")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
+    # processingTime until the offset covers the listing, NOT
+    # availableNow: the simple stream reader prefetches one batch per
+    # trigger, so availableNow stops after the first prefetch (same
+    # finding as x10_stream_custom_source)
+    n_files = sum(1 for f in os.listdir(path) if f.endswith(".out"))
+    _run_bounded(
+        spark,
+        lambda: lines.writeStream.foreachBatch(land),
+        until={"files_done": n_files},
     )
-    deadline = time.monotonic() + 120
-    idle = 0
-    while time.monotonic() < deadline and idle < 2:
-        if q.exception() is not None:
-            raise q.exception()
-        s = q.status
-        if (
-            q.lastProgress is not None
-            and not s["isDataAvailable"]
-            and not s["isTriggerActive"]
-        ):
-            idle += 1
-        else:
-            idle = 0
-        time.sleep(0.25)
-    q.stop()
-    assert idle >= 2, "stream did not drain"
 
     manifest = json.loads((tmp_path / "landed" / "manifest.json").read_text())
     total_lines = sum(

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from echem_dft_etl_spark.sources.sinks import (
     _committed_snapshots,
+    delete_keys_parquet,
     merge_parquet,
     upsert_parquet,
 )
@@ -94,6 +95,23 @@ def test_crashed_write_is_invisible(spark, tmp_path):
     # uncommitted dir neither advances the counter nor feeds the merge
     t = merge_parquet(_mk(spark, [("b", 2.0)]), str(root), ["MP_id"], "pzc")
     assert _rows(t) == {"a": 1.0, "b": 2.0}
+
+
+def test_crashed_write_at_next_version_does_not_block(spark, tmp_path):
+    """A torn dir AT the next version (the writer crashed mid-commit,
+    e.g. a failed stream attempt) is replaced by the next write instead
+    of failing it with PATH_ALREADY_EXISTS."""
+    root = str(tmp_path / "tbl")
+    merge_parquet(_mk(spark, [("a", 1.0)]), root, ["MP_id"], "pzc")
+    torn = tmp_path / "tbl" / "snap_0000000002"
+    torn.mkdir()
+    (torn / "part-00000.parquet").write_bytes(b"not parquet")
+    t = merge_parquet(_mk(spark, [("b", 2.0)]), root, ["MP_id"], "pzc")
+    assert _rows(t) == {"a": 1.0, "b": 2.0}
+    assert [v for v, _ in _committed_snapshots(spark, root)] == [1, 2]
+    (tmp_path / "tbl" / "snap_0000000003").mkdir()
+    kept = delete_keys_parquet(_mk(spark, [("a", 0.0)]), root, ["MP_id"])
+    assert _rows(kept) == {"b": 2.0}
 
 
 def test_compact_parquet_reduces_files_and_preserves_content(spark, tmp_path):

@@ -4,14 +4,15 @@
 from __future__ import annotations
 
 import datetime as dt
+import logging
 
+import pytest
 from pyspark.sql import functions as F
 
 from echem_dft_etl_spark.operators.sessions import session_aggregate, sessionize
 from echem_dft_etl_spark.sources import load_table
 from echem_dft_etl_spark.streaming.windows import (
     read_events_stream,
-    run_processing_time,
     run_to_memory,
     session_windows,
     tumbling_counts,
@@ -39,12 +40,13 @@ def test_stream_tumbling_processing_time_trigger(spark):
     """CONTINUOUS mode smoke (SURVEY §1.2): the same tumbling query
     under a periodic processingTime trigger must produce exactly the
     batch result once the bounded source drains — trigger cadence moves
-    batch boundaries, never window contents."""
+    batch boundaries, never window contents. The one-file parquet source
+    has drained once it reports ``{"logOffset": 0}``."""
     stream = tumbling_counts(read_events_stream(spark, SF_SMOKE), "1 hour", "2 hours")
     got = {
         (r.window_start, r.event_type): r.n_events
-        for r in run_processing_time(
-            stream, spark, mode="complete", interval="500 milliseconds"
+        for r in run_to_memory(
+            stream, spark, mode="complete", until={"logOffset": 0}
         ).collect()
     }
     ev = load_table(spark, SF_SMOKE, "events")
@@ -472,3 +474,148 @@ def test_stream_merge_latest_batch_split_invariant(spark, tmp_path):
         .collect()
     }
     assert got == want
+
+
+def test_until_waits_for_files_that_arrive_late(spark, tmp_path):
+    """Completion is proven from the source offset, not from a quiet
+    window: 14 of the 25 solver files are present at start, and the
+    other 11 land 1.0 s after the stream has read those 14 — an idle
+    gap longer than the 0.3 s quiet window that used to declare such a
+    stream finished. The stream must still read all 25."""
+    import ast
+    import os
+    import shutil
+    import threading
+    import time
+
+    from echem_dft_etl_spark.sources.solver_out import (
+        build_solver_out_fixture,
+        make_solver_out_datasource,
+        make_solver_out_stream_datasource,
+    )
+
+    spark.dataSource.register(make_solver_out_datasource())
+    spark.dataSource.register(make_solver_out_stream_datasource())
+    fixture = build_solver_out_fixture(spark, SF_SMOKE)
+    names = sorted(n for n in os.listdir(fixture) if n.endswith(".out"))
+    assert len(names) == 25
+    # the batch connector declares pushFilters, so it plans only with
+    # Python-source pushdown on (as in s02_custom_datasource)
+    pushdown = "spark.sql.python.filterPushdown.enabled"
+    prev = spark.conf.get(pushdown, "false")
+    spark.conf.set(pushdown, "true")
+    try:
+        want = {
+            r.run_id: r.n
+            for r in spark.read.format("solverout")
+            .option("path", fixture)
+            .load()
+            .filter(F.col("value").contains("FillingsUpdate:"))
+            .groupBy("run_id")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+    finally:
+        spark.conf.set(pushdown, prev)
+    src = tmp_path / "drop"
+    src.mkdir()
+
+    def drop(batch):
+        for n in batch:  # copy then rename: a listed file is complete
+            shutil.copy(os.path.join(fixture, n), src / f"{n}.part")
+            os.rename(src / f"{n}.part", src / n)
+
+    done = threading.Event()
+
+    def drop_late():
+        while not done.is_set():  # until the stream has read the 14
+            p = next((q.lastProgress for q in spark.streams.active), None)
+            offset = p and str(p["sources"][0]["endOffset"])
+            if offset and ast.literal_eval(offset) == {"files_done": 14}:
+                break
+            time.sleep(0.05)
+        if not done.wait(1.0):
+            drop(names[14:])
+
+    counts = (
+        spark.readStream.format("solverout_stream")
+        .option("path", str(src))
+        .option("batch_files", "7")
+        .load()
+        .filter(F.col("value").contains("FillingsUpdate:"))
+        .groupBy("run_id")
+        .agg(F.count("*").alias("n_fillings"))
+    )
+    drop(names[:14])
+    late = threading.Thread(target=drop_late)
+    late.start()
+    try:
+        got = run_to_memory(
+            counts, spark, "complete", until={"files_done": 25}
+        ).collect()
+    finally:
+        done.set()
+        late.join()
+    assert {r.run_id: r.n_fillings for r in got} == want
+
+
+def _bounded_case(spark, tmp_path, caller, fail):
+    """A thunk running one bounded-stream caller on the events replay;
+    with ``fail`` the stream's ``value`` goes through a Python UDF that
+    always raises."""
+    from echem_dft_etl_spark.streaming.windows import stream_merge_latest
+
+    ev = read_events_stream(spark, SF_SMOKE)
+    if fail:
+
+        def planted(v):
+            raise ValueError("planted stream failure")
+
+        ev = ev.withColumn("value", F.udf(planted, "double")("value"))
+    if caller == "merge_latest":
+        return lambda: stream_merge_latest(
+            spark, SF_SMOKE, str(tmp_path / "table"), events=ev
+        ).collect()
+    agg = ev.groupBy("event_type").agg(F.sum("value").alias("v"))
+    until = {"logOffset": 0} if caller == "memory_until" else None
+    return lambda: run_to_memory(agg, spark, "complete", until=until).collect()
+
+
+_CALLERS = ["memory_available_now", "memory_until", "merge_latest"]
+
+
+@pytest.mark.parametrize("caller", _CALLERS)
+def test_bounded_stream_failure_retries_once_visibly(
+    spark, tmp_path, caplog, caller
+):
+    """A stream that always fails is retried exactly once, the retry is
+    logged with the exception, the second failure raises chained to the
+    first, and the driver leaves no narrowed width or live query."""
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    run = _bounded_case(spark, tmp_path, caller, fail=True)
+    with caplog.at_level(
+        logging.WARNING, logger="echem_dft_etl_spark.streaming.windows"
+    ):
+        with pytest.raises(Exception, match="planted stream failure") as err:
+            run()
+    retries = [
+        r
+        for r in caplog.records
+        if r.name == "echem_dft_etl_spark.streaming.windows"
+    ]
+    assert len(retries) == 1
+    first = err.value.__cause__  # the second failure chains the first
+    assert first is not None and "planted stream failure" in str(first)
+    msg = retries[0].getMessage()
+    assert "retrying once" in msg and type(first).__name__ in msg
+    assert "planted stream failure" in msg
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    assert spark.streams.active == []
+
+
+@pytest.mark.parametrize("caller", _CALLERS)
+def test_bounded_stream_success_restores_width(spark, tmp_path, caller):
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert len(_bounded_case(spark, tmp_path, caller, fail=False)()) > 0
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    assert spark.streams.active == []
